@@ -11,10 +11,12 @@ was the reference's biggest operational bug class
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from smartpool_bigdata_spark.session import apply_runtime_confs
 
@@ -144,6 +146,39 @@ class Dataset:
     path: str
     fmt: str = "parquet"
     partition_by: tuple[str, ...] = ()
+    # The schema a read of ``path`` yields, known from the engine's last
+    # write there; None means "infer it from the files".
+    schema: StructType | None = None
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field and element nullable, as a parquet read
+    reports it."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def data_files(path: str) -> list[str]:
+    """Data files under a table directory, as sorted paths relative to it
+    (partition directories included) — a driver-side listing, no Spark
+    job. Hidden and metadata files (``_SUCCESS``, ``.crc``) are skipped."""
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        rel = os.path.relpath(root, path)
+        out += [
+            f if rel == "." else os.path.join(rel, f)
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
+    return sorted(out)
 
 
 @dataclass
@@ -175,9 +210,22 @@ class Catalog:
     def get(self, qualified: str) -> Dataset:
         return self.datasets[qualified]
 
-    def read(self, spark: SparkSession, qualified: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, qualified: str, files: Sequence[str] | None = None
+    ) -> DataFrame:
+        """Read a dataset — with its remembered schema when the engine
+        wrote it (no schema-inference job), else inferred from the files.
+        ``files`` (paths relative to the dataset root, as ``data_files``
+        lists them) restricts the read to those data files; partition
+        columns still come from the directory layout."""
         ds = self.get(qualified)
-        return spark.read.format(ds.fmt).load(ds.path)
+        reader = spark.read.format(ds.fmt)
+        if ds.schema is not None:
+            reader = reader.schema(ds.schema)
+        if files is None:
+            return reader.load(ds.path)
+        paths = [os.path.join(ds.path, f) for f in files]
+        return reader.option("basePath", ds.path).load(paths)
 
     def write(
         self,
@@ -187,12 +235,29 @@ class Catalog:
         overwrite_schema: bool = False,
     ) -> None:
         ds = self.get(qualified)
+        fresh = not os.path.exists(ds.path)
         writer = df.write.format(ds.fmt).mode(mode)
         if ds.partition_by:
             writer = writer.partitionBy(*ds.partition_by)
         if overwrite_schema and ds.fmt == "delta":
             writer = writer.option("overwriteSchema", "true")
         writer.save(ds.path)
+        self.remember(qualified, df.schema, replaced=fresh or mode == "overwrite")
+
+    def remember(self, qualified: str, schema: StructType, replaced: bool = True) -> None:
+        """Record that the engine wrote rows of ``schema`` to ``qualified``,
+        so later reads skip schema inference. ``replaced=False`` (an
+        append onto existing files) keeps the memo only when it already
+        equals ``schema``: files of another or unknown schema may be
+        there, so reads go back to inference. Parquet only — a Delta
+        table's log already carries its schema."""
+        ds = self.get(qualified)
+        if ds.fmt != "parquet":
+            return
+        parts = [schema[c] for c in ds.partition_by]
+        data = [f for f in schema.fields if f.name not in ds.partition_by]
+        read_schema = _nullable(StructType(data + parts))
+        ds.schema = read_schema if replaced or ds.schema == read_schema else None
 
     def exists(self, spark: SparkSession, qualified: str) -> bool:
         ds = self.get(qualified)

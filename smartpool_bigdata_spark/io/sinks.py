@@ -17,13 +17,51 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from smartpool_bigdata_spark.catalog import data_files
+from smartpool_bigdata_spark.ops.relational import latest_by_key
 
-def _exists(spark: SparkSession, path: str) -> bool:
+
+def _exists(spark: SparkSession | None, path: str) -> bool:
+    """Whether ``path`` holds a table: a file, or a directory with at least
+    one data file (a zero-row write still leaves one). A driver-side
+    filesystem check — no schema-inference job. ``spark`` is unused and
+    kept for the call shape."""
+    return os.path.isfile(path) or bool(data_files(path))
+
+
+def recover_swap(path: str) -> None:
+    """Undo a table swap that a crash cut short. ``_swap`` renames the
+    table to ``<path>__old_<id>`` and the stage to ``path``; a crash
+    between the two renames leaves no table at ``path``, and the next
+    writer would start from nothing. Put the old copy back, then drop
+    leftover old copies and stages."""
+    parent, base = os.path.split(path.rstrip("/"))
     try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
+        entries = os.listdir(parent or ".")
+    except FileNotFoundError:
+        return
+    olds = [os.path.join(parent, e) for e in entries if e.startswith(f"{base}__old_")]
+    if olds and not os.path.exists(path):
+        newest = max(olds, key=os.path.getmtime)
+        os.rename(newest, path)
+        olds.remove(newest)
+    stages = [os.path.join(parent, e) for e in entries if e.startswith(f"{base}__stage_")]
+    for leftover in olds + stages:
+        shutil.rmtree(leftover, ignore_errors=True)
+
+
+def _swap(stage: str, path: str) -> None:
+    """Put the table written at ``stage`` in place of ``path``: two
+    renames, then the old copy is dropped. The two renames are the
+    non-transactional step a Delta log would make atomic;
+    ``recover_swap`` repairs a crash between them."""
+    if not os.path.exists(path):
+        os.rename(stage, path)
+        return
+    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
+    os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def merge_upsert(
@@ -32,39 +70,70 @@ def merge_upsert(
     source: DataFrame,
     keys: Sequence[str],
     partition_by: Sequence[str] = (),
-) -> None:
+    order_by: Sequence = (),
+    expectations=None,
+    schema: StructType | None = None,
+) -> StructType:
     """Upsert (S13): matched target rows are replaced by source rows,
     unmatched source rows are inserted — the semantics of
     ``DeltaTable.merge(...).whenMatchedUpdateAll().whenNotMatchedInsertAll()``
-    (``notebooks/03_silver_smartpool.ipynb:253-259``).
+    (``notebooks/03_silver_smartpool.ipynb:253-259``). Returns the schema
+    of the table written.
 
     Parquet realization: ``target ANTI-JOIN source ON keys`` ∪ ``source``,
-    staged to a sibling directory then swapped in. The swap is the
-    non-transactional step Delta's log would make atomic — acceptable for
-    local/test substrates, replaced by real MERGE on a Delta deployment.
+    staged to a sibling directory then swapped in (``_swap``). A crash
+    mid-swap is repaired by the next call (``recover_swap``).
+
+    * ``order_by`` (best-first, as ``latest_by_key`` takes it) makes the
+      merge order-aware — ``whenMatchedUpdate(condition=source newer)``:
+      ``source`` may hold several rows per key, and each key keeps
+      whichever of its target row and source rows sorts first, so a
+      late, older source row never overwrites a newer target row, and
+      re-merging rows already merged changes nothing.
+    * ``expectations`` (a ``Suite``): its foldable checks observe the
+      merged table during the staged write (no extra pass), its own-job
+      checks run on the source's upsert rows (its best row per key under
+      ``order_by``). A violation deletes the stage and raises
+      ``ExpectationError``; the target is untouched.
+    * ``schema`` is the target's schema when the caller knows it (a table
+      it wrote), so reading the target runs no schema-inference job.
 
     Scale: the anti-join shuffles on ``keys`` (or broadcasts a small
-    source); cost is proportional to target ∪ source like any
-    copy-on-write MERGE without file-level pruning.
+    source); ``order_by`` adds one shuffle on ``keys`` of the source and
+    its matched target rows only. Cost is proportional to target ∪
+    source like any copy-on-write MERGE without file-level pruning.
     """
-    if not _exists(spark, target_path):
-        writer = source.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(target_path)
-        return
-    target = spark.read.parquet(target_path)
-    merged = target.join(source.select(*keys).distinct(), on=list(keys), how="left_anti")
-    merged = merged.unionByName(source, allowMissingColumns=False)
-    stage = f"{target_path.rstrip('/')}__stage_{uuid.uuid4().hex[:8]}"
+    target_path = target_path.rstrip("/")
+    keys = list(keys)
+    recover_swap(target_path)
+    upsert = latest_by_key(source, keys, order_by) if order_by else source
+    merged = upsert
+    if _exists(spark, target_path):
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        target = reader.parquet(target_path)
+        src_keys = source.select(*keys)
+        if order_by:
+            matched = target.join(src_keys, on=keys, how="left_semi")
+            merged = latest_by_key(source.unionByName(matched), keys, order_by)
+        merged = target.join(src_keys, on=keys, how="left_anti").unionByName(
+            merged, allowMissingColumns=False
+        )
+    obs = None
+    if expectations is not None:
+        merged, obs = expectations.observe(merged)
+    stage = f"{target_path}__stage_{uuid.uuid4().hex[:8]}"
     writer = merged.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(stage)
-    old = f"{target_path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(stage, target_path)
-    shutil.rmtree(old, ignore_errors=True)
+    if expectations is not None:
+        try:
+            expectations.validate_observation(obs, upsert)
+        except BaseException:
+            shutil.rmtree(stage, ignore_errors=True)
+            raise
+    _swap(stage, target_path)
+    return merged.schema
 
 
 def merge_upsert_cdf(
@@ -107,6 +176,7 @@ def merge_upsert_cdf(
     target's last applied version.
     """
     src_keys = source.select(*keys).distinct()
+    recover_swap(target_path)
     if _exists(spark, target_path):
         target = spark.read.parquet(target_path)
         matched_keys = target.select(*keys).distinct().join(
@@ -252,10 +322,7 @@ def compact_table(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(stage)
-    old = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(stage, path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap(stage, path.rstrip("/"))
     after = table_detail(spark, path)
     return {"files_before": before["numFiles"], "files_after": after["numFiles"]}
 

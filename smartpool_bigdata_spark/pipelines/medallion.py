@@ -9,10 +9,22 @@ expectations, and Gold builds as plain DataFrame functions.
 
 Scale posture per layer:
 
-* Bronze — append-only, cost ∝ the watermark delta, never the table.
-* Silver — one shuffle (latest_by_key on the pk) + single-pass
-  expectation validation; partitioned writes so Gold reads prune.
-* Gold — each build is a normal Catalyst plan; dims stay broadcast-side.
+* Bronze — append-only, cost ∝ the watermark delta, never the table: the
+  filtered source is checkpointed once and one aggregate over it gives
+  both emptiness and the next keyset; the watermark is a driver-side JSON
+  doc.
+* Silver (merge) — dedupes only the Bronze files it has not merged yet
+  (listed on the driver, tracked in a JSON state doc). The MERGE itself
+  still rewrites the whole Silver table (copy-on-write, no file
+  pruning), so its cost grows with Silver; the foldable expectations
+  ride that write, ``Unique``-style checks run on the delta only.
+  Silver (snapshot) re-derives the table from all of Bronze.
+* Gold — each build is a normal Catalyst plan over whole Silver;
+  dims stay broadcast-side.
+
+Metadata stays on the driver: the catalog reads every table the engine
+wrote with the schema it wrote (no schema-inference job), and table
+existence is a filesystem check.
 """
 
 from __future__ import annotations
@@ -21,10 +33,10 @@ from collections.abc import Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from smartpool_bigdata_spark.catalog import Catalog
+from smartpool_bigdata_spark.catalog import Catalog, data_files
 from smartpool_bigdata_spark.expectations import Suite
 from smartpool_bigdata_spark.ops.relational import latest_by_key, with_audit_columns
-from smartpool_bigdata_spark.io.sinks import merge_upsert
+from smartpool_bigdata_spark.io.sinks import merge_upsert, recover_swap
 from smartpool_bigdata_spark.state import WatermarkStore, incremental_ingest
 
 
@@ -60,9 +72,8 @@ class MedallionPipeline:
         )
 
         def sink(delta: DataFrame) -> None:
-            with_audit_columns(
-                delta, source=audit_source, ingest_ts=audit_ts
-            ).write.mode("append").parquet(ds.path)
+            audited = with_audit_columns(delta, source=audit_source, ingest_ts=audit_ts)
+            self.catalog.write(audited, ds.name, mode="append")
 
         return incremental_ingest(
             source_df, self.store, name, ts_col, sink, pk_col=pk_col
@@ -111,20 +122,44 @@ class MedallionPipeline:
         """Silver via MERGE upsert instead of overwrite — the notebook
         variant (``notebooks/03_silver_smartpool.ipynb:253-259``): cheaper
         than a snapshot when the delta is small vs the table.
+
+        Only the Bronze files not merged yet are deduped; the list of
+        merged files lives in the ``silver.<name>`` state doc (no doc, or
+        no Silver table: all of Bronze is new). The merge is order-aware,
+        so the result equals ``silver_snapshot`` over the same Bronze even
+        when a late row is older than its Silver row. ``order_by`` must
+        use columns Silver keeps. ``expectations`` gate the staged
+        write; a violation leaves Silver and the state doc as they were.
+        The state doc is written after the Silver swap: a crash between
+        the two re-merges the same files on retry, which changes nothing.
         """
         bn = bronze_name or name
-        if f"bronze.{bn}" not in self.catalog.datasets:
-            self.catalog.define("bronze", bn)
-        bronze = self.catalog.read(self.spark, f"bronze.{bn}")
-        delta = latest_by_key(bronze, keys, order_by)
-        if drop_audit:
-            delta = delta.drop("_ingest_ts", "_ingest_date", "_source")
-        if expectations is not None:
-            expectations.validate(delta)
+        bronze_ds = self.catalog.datasets.get(f"bronze.{bn}") or self.catalog.define(
+            "bronze", bn
+        )
         ds = self.catalog.datasets.get(f"silver.{name}") or self.catalog.define(
             "silver", name, partition_by=tuple(partition_by)
         )
-        merge_upsert(self.spark, ds.path, delta, keys, partition_by=partition_by)
+        state = f"silver.{name}"
+        recover_swap(ds.path)  # a swap cut by a crash must not read as "no Silver"
+        files = data_files(bronze_ds.path)
+        done = set()
+        if data_files(ds.path):
+            done = set((self.store.read_doc(state) or {}).get("bronze_files", ()))
+        new = [f for f in files if f not in done]
+        if not new:
+            return self.catalog.read(self.spark, ds.name)
+        delta = self.catalog.read(self.spark, bronze_ds.name, files=new)
+        if drop_audit:
+            delta = delta.drop("_ingest_ts", "_ingest_date", "_source")
+        # merge_upsert dedupes the delta: its window runs over the delta
+        # and the matched Silver rows together.
+        schema = merge_upsert(
+            self.spark, ds.path, delta, keys, partition_by=ds.partition_by,
+            order_by=order_by, expectations=expectations, schema=ds.schema,
+        )
+        self.catalog.remember(ds.name, schema)
+        self.store.write_doc(state, {"bronze_files": files})
         return self.catalog.read(self.spark, ds.name)
 
     # -- gold ----------------------------------------------------------------

@@ -15,17 +15,20 @@ notebook landed on — and the protocol here — is:
   last_ts AND pk > last_pk)`` so equal-timestamp rows are neither skipped
   nor double-ingested (:127-128).
 
-Scale: the state doc is one row — reading it is a driver-side metadata op;
-the predicate it generates is pushed down (to the JDBC source as SQL, to
-parquet as a min/max-pruned filter), so an incremental run's cost is
-proportional to the delta, not the table.
+Scale: the state doc is a few bytes of JSON that the driver reads and
+writes with plain file I/O — no Spark job, no Python worker. The predicate
+it generates is pushed down (to the JDBC source as SQL, to parquet as a
+min/max-pruned filter), so an incremental run's cost is proportional to
+the delta, not the table.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 # 26 chars: "yyyy-MM-dd HH:mm:ss.SSSSSS" — full Spark µs precision.
@@ -33,57 +36,91 @@ TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
 
 class WatermarkStore:
-    """Named single-row state documents under ``<root>/_state/<name>``.
+    """Named state documents, one small JSON file each at
+    ``<root>/_state/<name>.json``.
 
-    Three protocols, mirroring the reference's three flows (§3.1-3.2):
-    ``last_ts`` (string timestamp), ``keyset`` (string timestamp + pk),
-    ``last_date`` (date string). Parquet-backed; a literal-DataFrame source
-    (S17) written with overwrite — same shape as
-    ``spark.createDataFrame([(ts,)], ["last_execution"])`` in the
-    reference (``spark-apps/02_ingest_smartpool.py:40-42``).
+    Three watermark protocols, mirroring the reference's three flows
+    (§3.1-3.2): ``last_ts`` (string timestamp), ``keyset`` (string
+    timestamp + pk), ``last_date`` (date string) — the fields of the
+    reference's single-row state table
+    (``spark-apps/02_ingest_smartpool.py:40-42``), kept on the driver.
+    ``read_doc``/``write_doc`` hold any other small per-name state (the
+    Silver merge's list of Bronze files it has merged).
+
+    A write goes to a temp file in ``_state/`` that is then
+    ``os.replace``d over the doc, so a crash leaves the old doc or the new
+    one, never a torn one. A missing doc means "no state yet" (first run);
+    a doc that exists but cannot be parsed raises ``ValueError`` instead of
+    reading as "no state", which would re-ingest the whole source.
+    ``spark`` is unused and kept for the constructor's call shape.
     """
 
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
+    def __init__(self, spark: SparkSession | None, root: str):
         self.root = root
 
     def _path(self, name: str) -> str:
-        return os.path.join(self.root, "_state", name)
+        return os.path.join(self.root, "_state", f"{name}.json")
 
-    def _read_row(self, name: str):
+    def read_doc(self, name: str) -> dict | None:
+        path = self._path(name)
         try:
-            rows = self.spark.read.parquet(self._path(name)).limit(1).collect()
-        except Exception:
+            with open(path, encoding="utf-8") as f:
+                doc = json.load(f)
+        except FileNotFoundError:
             return None
-        return rows[0] if rows else None
+        except ValueError as exc:  # bad JSON or bad UTF-8
+            raise ValueError(f"state doc {path} cannot be parsed: {exc}") from exc
+        if not isinstance(doc, dict):
+            raise ValueError(f"state doc {path} is not a JSON object")
+        return doc
 
-    def _write_row(self, name: str, data: list[tuple], cols: list[str]) -> None:
-        df = self.spark.createDataFrame(data, cols)
-        df.coalesce(1).write.mode("overwrite").parquet(self._path(name))
+    def write_doc(self, name: str, doc: dict) -> None:
+        path = self._path(name)
+        folder = os.path.dirname(path)
+        os.makedirs(folder, exist_ok=True)
+        fd, tmp = tempfile.mkstemp(prefix=f".{name}.", suffix=".tmp", dir=folder)
+        try:
+            with os.fdopen(fd, "w", encoding="utf-8") as f:
+                json.dump(doc, f)
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, path)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
+            raise
+
+    def _fields(self, name: str, *keys: str):
+        doc = self.read_doc(name)
+        if doc is None:
+            return None
+        missing = [k for k in keys if k not in doc]
+        if missing:
+            raise ValueError(f"state doc {self._path(name)} lacks {missing}")
+        return tuple(doc[k] for k in keys)
 
     # -- last_ts protocol ---------------------------------------------------
     def read_last_ts(self, name: str) -> str | None:
-        row = self._read_row(name)
-        return row["last_ts"] if row else None
+        got = self._fields(name, "last_ts")
+        return got[0] if got else None
 
     def write_last_ts(self, name: str, last_ts: str) -> None:
-        self._write_row(name, [(last_ts,)], ["last_ts"])
+        self.write_doc(name, {"last_ts": last_ts})
 
     # -- keyset protocol ----------------------------------------------------
     def read_keyset(self, name: str) -> tuple[str, int] | None:
-        row = self._read_row(name)
-        return (row["last_ts"], row["last_pk"]) if row else None
+        return self._fields(name, "last_ts", "last_pk")
 
     def write_keyset(self, name: str, last_ts: str, last_pk: int) -> None:
-        self._write_row(name, [(last_ts, last_pk)], ["last_ts", "last_pk"])
+        self.write_doc(name, {"last_ts": last_ts, "last_pk": last_pk})
 
     # -- last_date protocol -------------------------------------------------
     def read_last_date(self, name: str) -> str | None:
-        row = self._read_row(name)
-        return row["last_date"] if row else None
+        got = self._fields(name, "last_date")
+        return got[0] if got else None
 
     def write_last_date(self, name: str, last_date: str) -> None:
-        self._write_row(name, [(last_date,)], ["last_date"])
+        self.write_doc(name, {"last_date": last_date})
 
 
 def ts_string(col: Column | str) -> Column:
@@ -173,35 +210,6 @@ def read_increment(
     return source_df.filter(keyset_predicate(ts_col, None, last_ts))
 
 
-def advance_watermark(
-    delta_df: DataFrame,
-    store: WatermarkStore,
-    name: str,
-    ts_col: str,
-    pk_col: str | None = None,
-) -> str | None:
-    """Advance the stored watermark to the delta's max (ts[, pk-at-max-ts]).
-
-    Call AFTER the delta has landed downstream — the reference's order
-    (Bronze append ``spark-apps/02_ingest_smartpool.py:67-72`` THEN state
-    overwrite :74-76), which makes a failed downstream write retryable
-    (at-least-once) instead of silently skipping rows. Returns the new
-    watermark string, or None when the delta was empty (state untouched —
-    the empty-input short-circuit, :62-64).
-    """
-    agg = [F.max(ts_string(ts_col)).alias("ts")]
-    if pk_col is not None:
-        agg.append(F.max_by(F.col(pk_col), F.struct(ts_col, pk_col)).alias("pk"))
-    head = delta_df.agg(*agg).collect()[0]
-    if head["ts"] is None:
-        return None
-    if pk_col is not None:
-        store.write_keyset(name, head["ts"], head["pk"])
-    else:
-        store.write_last_ts(name, head["ts"])
-    return head["ts"]
-
-
 def incremental_ingest(
     source_df: DataFrame,
     store: WatermarkStore,
@@ -214,11 +222,30 @@ def incremental_ingest(
     advance watermark. Returns False (and leaves state untouched) when the
     increment is empty. The engine twin of the reference's per-table ingest
     loop (``spark-apps/02_ingest_smartpool.py:34-76``).
+
+    The filtered source is checkpointed once (its rows are pinned: the
+    source may move on), and ONE aggregate over the checkpointed rows —
+    observed on the checkpoint job itself, so it costs no pass of its
+    own — yields both the emptiness test and the next watermark (max
+    ts[, pk at max ts]). The watermark is written only AFTER ``write_fn``
+    returns — the reference's order (Bronze append ``:67-72`` THEN state
+    overwrite ``:74-76``), which makes a failed downstream write
+    retryable (at-least-once) instead of silently skipping rows. A delta
+    whose timestamps are all null lands but leaves the state untouched.
     """
-    delta = read_increment(source_df, store, name, ts_col, pk_col)
-    if delta.isEmpty():
+    agg = [F.count(F.lit(1)).alias("n"), F.max(ts_string(ts_col)).alias("ts")]
+    if pk_col is not None:
+        agg.append(F.max_by(F.col(pk_col), F.struct(ts_col, pk_col)).alias("pk"))
+    head = Observation()
+    delta = read_increment(source_df, store, name, ts_col, pk_col).observe(head, *agg)
+    delta = delta.localCheckpoint(eager=True)
+    row = head.get
+    if row["n"] == 0:
         return False
-    delta = delta.localCheckpoint(eager=True)  # pin rows: source may move on
     write_fn(delta)
-    advance_watermark(delta, store, name, ts_col, pk_col)
+    if row["ts"] is not None:
+        if pk_col is not None:
+            store.write_keyset(name, row["ts"], row["pk"])
+        else:
+            store.write_last_ts(name, row["ts"])
     return True

@@ -136,18 +136,37 @@ def test_cube_single_aggregate_pass(plans):
     assert final.count("Scan parquet") == 1
 
 
-def test_profile_summary_single_scan(plans):
+def test_profile_summary_single_scan(plans, spark, monkeypatch):
     """The ANALYZE-analog must profile every column from ONE
     materialized scan: the checkpointed events frame feeds the base
     aggregate and the six per-column distinct branches (r13: the 6-way
     count-DISTINCT Expand — a 6x row fan-out — is gone; verdict #7),
     so the final plan has NO Expand and NO parquet re-scan per column
-    (the one parquet scan lives inside the checkpointed RDD)."""
+    (the one parquet scan lives inside the checkpointed RDD).
+
+    The checkpoint cuts the lineage, so the final plan alone cannot show
+    how many scans feed it: the frame handed to ``localCheckpoint`` is
+    captured too, and its plan must hold exactly one parquet scan."""
     plan = plans("events_profile_summary")
     final = plan.split("== Initial Plan ==")[0]
     assert "Expand" not in final
     assert final.count("Scan parquet") == 0  # behind the checkpoint
     assert "Scan ExistingRDD" in final
+
+    frame_cls = type(spark.range(1))  # the concrete (classic) DataFrame
+    checkpointed = []
+    real = frame_cls.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        checkpointed.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", capture)
+    REGISTRY["events_profile_summary"].build(spark, SF_DIR)
+    monkeypatch.undo()
+    assert len(checkpointed) == 1
+    pre = checkpointed[0]._jdf.queryExecution().executedPlan().toString()
+    assert pre.split("== Initial Plan ==")[0].count("Scan parquet") == 1
 
 
 def test_aqe_splits_skewed_join_at_runtime(spark):

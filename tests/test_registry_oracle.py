@@ -42,26 +42,33 @@ def test_query_matches_oracle(spark, duck):
     names = [n for n in sorted(REGISTRY) if n not in _SERIAL_FIRST]
 
     def _spark_side(name):
+        # Any error (Py4J, analysis, I/O) fails this query alone instead
+        # of aborting the sweep.
         q = REGISTRY[name]
-        sdf = q.build(spark, SF_DIR)
-        if q.oracle is None:
-            return name, None, sdf.count()
-        return name, spark_snapshot(sdf), None
+        try:
+            sdf = q.build(spark, SF_DIR)
+            if q.oracle is None:
+                return name, None, sdf.count(), None
+            return name, spark_snapshot(sdf), None, None
+        except Exception as exc:
+            return name, None, None, f"spark side: {type(exc).__name__}: {exc}"
 
     results = [_spark_side(n) for n in _SERIAL_FIRST if n in REGISTRY]
     with ThreadPoolExecutor(max_workers=12) as pool:
         results += list(pool.map(_spark_side, names))
 
     failures = {}
-    for name, snapshot, rowcount in results:
+    for name, snapshot, rowcount, error in results:
         q = REGISTRY[name]
         try:
+            if error is not None:
+                raise AssertionError(error)
             if snapshot is None:
                 assert rowcount >= 0  # rows-only check, like the driver
             else:
                 compare_snapshot_to_oracle(snapshot, duck, q.oracle)
-        except AssertionError as exc:  # collect all, report together
-            failures[name] = str(exc)[:300]
+        except Exception as exc:  # collect all (DuckDB errors too), report together
+            failures[name] = f"{type(exc).__name__}: {exc}"[:300]
     assert not failures, f"{len(failures)} queries off oracle: {failures}"
 
 

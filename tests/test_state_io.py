@@ -675,3 +675,69 @@ def test_dst_boundary_drift_parse_and_watermark_roundtrip(spark, tmp_path):
     landed = spark.read.parquet(bronze)
     assert landed.count() == 4  # no dup of rows 1-3, row 4 exactly once
     assert landed.select("event_id").distinct().count() == 4
+
+
+def test_watermark_missing_doc_is_first_run(spark, tmp_path):
+    """No state doc yet means "first run" for every protocol."""
+    store = WatermarkStore(spark, str(tmp_path))
+    assert store.read_keyset("t") is None
+    assert store.read_last_ts("t") is None
+    assert store.read_last_date("t") is None
+    assert store.read_doc("t") is None
+    store.write_keyset("t", "2024-03-01 10:00:00.123456", 7)
+    assert store.read_keyset("t") == ("2024-03-01 10:00:00.123456", 7)
+    assert sorted(os.listdir(tmp_path / "_state")) == ["t.json"]  # no temp left
+
+
+def test_watermark_unreadable_doc_raises(spark, tmp_path):
+    """A state doc that exists but cannot be parsed must raise — reading
+    it as "no state" would re-ingest the whole source into Bronze."""
+    import pytest as _pytest
+
+    store = WatermarkStore(spark, str(tmp_path))
+    bronze = str(tmp_path / "bronze")
+    v1 = _mk(spark, [(1, _ts("2024-03-01 00:00:01"), "a")])
+    sink = lambda d: d.write.mode("append").parquet(bronze)  # noqa: E731
+    assert incremental_ingest(v1, store, "t", "updated_at", sink, pk_col="pk")
+
+    doc = tmp_path / "_state" / "t.json"
+    doc.write_text('{"last_ts": "2024-03-01 00:00:0')  # torn write
+    with _pytest.raises(ValueError, match="cannot be parsed"):
+        incremental_ingest(v1, store, "t", "updated_at", sink, pk_col="pk")
+    doc.write_text('{"last_ts": "2024-03-01 00:00:01.000000"}')  # no last_pk
+    with _pytest.raises(ValueError, match="lacks"):
+        store.read_keyset("t")
+    assert spark.read.parquet(bronze).count() == 1  # nothing re-ingested
+
+
+def test_merge_upsert_recovers_interrupted_swap(spark, tmp_path, monkeypatch):
+    """A crash between the swap's two renames leaves no table at the
+    target, only ``<target>__old_*``. The next call must put the old
+    table back before merging: no row lost, none duplicated."""
+    import pytest as _pytest
+
+    target = str(tmp_path / "silver")
+    base = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"])
+    merge_upsert(spark, target, base, keys=["id"])
+    src = spark.createDataFrame([(2, "b2"), (3, "c")], ["id", "v"])
+
+    real_rename = os.rename
+    calls = []
+
+    def crash_on_second(a, b):
+        calls.append((a, b))
+        if len(calls) == 2:
+            raise OSError("crash between the swap renames")
+        real_rename(a, b)
+
+    monkeypatch.setattr(os, "rename", crash_on_second)
+    with _pytest.raises(OSError, match="crash between"):
+        merge_upsert(spark, target, src, keys=["id"])
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert not os.path.exists(target)
+    assert any("__old_" in e for e in os.listdir(tmp_path))
+
+    merge_upsert(spark, target, src, keys=["id"])  # the retry
+    rows = sorted((r["id"], r["v"]) for r in spark.read.parquet(target).collect())
+    assert rows == [(1, "a"), (2, "b2"), (3, "c")]
+    assert sorted(os.listdir(tmp_path)) == ["silver"]  # old copy and stage gone
