@@ -19,12 +19,10 @@ bounded (safe); growth ~= SF ratio = linear (flagged). Run:
     python scripts/broadcast_audit.py [sf_small sf_big [sf_huge]]
 
 defaults: /root/testdata/sf0.01 /root/testdata/sf0.1 (10x). Pass the
-builder-synthesized sf1 tier (scripts/gen_probe_sf1.py, all 10 tables
-since r11) as the third argument to verify "bounded" frames stay
-bounded across TWO decades:
+path of an sf1 tier (10x sf0.1, all 10 tables) as the third
+argument to verify "bounded" frames stay bounded across TWO decades:
 
-    python scripts/broadcast_audit.py /root/testdata/sf0.01 \\
-        /root/testdata/sf0.1 /tmp/sf1_probe
+    python scripts/broadcast_audit.py SF001_DIR SF01_DIR SF1_DIR
 
 Output: one line per query with its per-broadcast row trajectories,
 then a FLAGGED section listing broadcasts whose LAST decade's ratio

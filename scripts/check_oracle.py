@@ -6,9 +6,9 @@ row count, column names, and an order-insensitive value hash.
 
 Usage: python scripts/check_oracle.py [--json OUT] [sf_dir] [query ...]
 
-``--json OUT`` additionally writes a machine-readable per-query map in
-the driver's CORRECTNESS_r{N}.json row shape — used to regenerate the
-committed full-registry artifact (CORRECTNESS_FULL.json).
+``--json OUT`` additionally writes a machine-readable per-query map —
+used to regenerate the committed full-registry artifact
+(CORRECTNESS_FULL.json).
 """
 
 from __future__ import annotations

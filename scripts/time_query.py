@@ -3,8 +3,8 @@
 Times each named registry query with the noop sink, N materializations
 (fresh build each time, same session), printing every run plus the min —
 min-of-N in one session cancels host drift far better than two separate
-bench invocations, so before/after comparisons for a single query should
-use this, not full bench.py runs.
+whole-registry runs, so before/after comparisons for a single query should
+use this.
 
 Usage: python scripts/time_query.py [-n N] [sf_dir] query [query ...]
 """
@@ -40,7 +40,7 @@ def main() -> int:
     spark = get_spark(app_name="time-query", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Same warm-up as bench.py: JVM, footer cache, Python worker pool.
+    # Warm-up: JVM, footer cache, Python worker pool.
     from pyspark.sql import functions as F
 
     from smartpool_bigdata_spark.catalog import load_table

@@ -258,11 +258,3 @@ class Catalog:
         data = [f for f in schema.fields if f.name not in ds.partition_by]
         read_schema = _nullable(StructType(data + parts))
         ds.schema = read_schema if replaced or ds.schema == read_schema else None
-
-    def exists(self, spark: SparkSession, qualified: str) -> bool:
-        ds = self.get(qualified)
-        try:
-            spark.read.format(ds.fmt).load(ds.path).schema
-            return True
-        except Exception:
-            return False

@@ -179,8 +179,7 @@ class Unique:
             .agg(F.count(F.lit(1)).alias("c"))
             .filter(F.col("c") > 1)
         )
-        n = dup.limit(1).count()
-        if n:
+        if not dup.isEmpty():
             return [Violation("unique", f"duplicate keys exist for {list(self.keys)}")]
         return []
 

@@ -1123,11 +1123,11 @@ def incremental_dedup_batch(
 
 
 def decontamination_overlap_from_stage(
-    train_staged: DataFrame, bench_staged: DataFrame, ngram: int = 13
+    train_staged: DataFrame, benchmark_staged: DataFrame, ngram: int = 13
 ) -> DataFrame:
     """``decontamination_overlap`` off pre-staged token-hash frames."""
     bench_grams = (
-        bench_staged
+        benchmark_staged
         .select(F.explode(F.expr(spark_shingle_hashes("__th", ngram))).alias("g"))
         .distinct()
     )
@@ -1300,9 +1300,8 @@ def prefix_filter_pairs(
     ``candidate_observation``: an optional ``pyspark.sql.Observation``
     attached to the DISTINCT candidate-pair stage (metric
     ``n_candidates``) — the cost driver of the exactness tier. It rides
-    the pair job for free (no extra pass); ``scripts/
-    probe_prefix_filter.py`` uses it for the measured candidate-growth
-    curve vs the LSH tier recorded in SCALE.md §3.
+    the pair job for free (no extra pass); the measured candidate-growth
+    curve vs the LSH tier recorded in SCALE.md §3 was read from it.
 
     ``candidate_budget``: circuit breaker for the exact tier's one
     superlinear cost. The sf0.01->sf1 probe measured 160x candidate
@@ -1399,8 +1398,8 @@ def prefix_filter_pairs(
     # token event always survives (its bound >= the true overlap), so
     # recall stays exact while the dominant waste class — common
     # shingles matching late in two long prefixes — dies before the
-    # distinct+verify. Measured (scripts/probe_prefix_filter.py,
-    # sf0.1): candidates 760k -> 273k (2.8x), 10x-docs candidate growth
+    # distinct+verify. Measured (sf0.1, through candidate_observation):
+    # candidates 760k -> 273k (2.8x), 10x-docs candidate growth
     # 826x -> 455x, sf0.01 verify selectivity 0.65 -> 1.0. The AllPairs
     # asymmetric probing prefix was measured too and REMOVED: this
     # filter subsumes it (an event past the 2t/(1+t) mid-prefix cannot

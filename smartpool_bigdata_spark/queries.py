@@ -39,8 +39,10 @@ class Query:
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     description: str = ""
-    # Excluded from bench.py's headline loop (e.g. quadratic-oracle demos
-    # whose scale path is a separate query, or trivially tiny outputs).
+    # Marks queries that run real streams or staged I/O (streaming drains,
+    # ingest round-trips), plus a few quadratic or iterative demos; the
+    # plan sweeps (tests/test_plans.py, scripts/shuffle_audit.py,
+    # scripts/plan_audit.py, scripts/broadcast_audit.py) skip them.
     skip_bench: bool = False
 
 
@@ -2806,140 +2808,6 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Gate-priority ordering.
-#
-# The driver's correctness gate records exactly the FIRST 50 registry entries
-# in iteration order, so registration order decides which queries get a hard
-# CORRECTNESS row. The window is ROTATED per round so every registry query
-# earns a driver row across consecutive rounds:
-#
-# * r3 window: the 50 SURVEY.md §2 operator-family queries (all of §2.7
-#   streaming, the §3.1 keyset protocol, medallion, the LLM dedup/ANN
-#   core) — all 50 green in CORRECTNESS_r03.json.
-# * r4 window: the 50 queries the r3 window displaced (OLAP extensions,
-#   TF-IDF/winnowing/PQ/kmeans-IVF, the stream-stream join pair, ...) —
-#   all 50 green in CORRECTNESS_r04.json.
-# * r5 window: the 14 round-4 additions that had no driver row yet, the
-#   16 round-5 additions, and 20 re-confirmation slots from the oldest
-#   (r3) window — all 50 green in CORRECTNESS_r05.json; the r3–r5 union
-#   covered the whole registry.
-# * r6 window (below), executing the r5 verdict's #1/#2 asks: the 19
-#   round-6 additions (schema-merge append gate, bootstrap+metadata
-#   round-trip, streaming IVF/PQ maintenance, curation pipeline v3,
-#   the combined IVF-PQ index, the sketch family, live JDBC, audio,
-#   LATERAL, snowflake rollup, prefix-filter similarity join,
-#   fixed-iteration PageRank), then ALL 30 queries whose NEWEST driver
-#   row is still the r3 window (the oldest greens — OLAP/doc/knn
-#   families last hard-checked two rounds ago). The late r6 additions
-#   displaced the r4 re-confirmation fillers, which is fine: r4 rows
-#   stay within the two-round freshness policy, so after this round
-#   every registry query's newest driver row is at most two rounds old
-#   (r4–r6).
-#   test_gate_window_pinned asserts exactly that coverage.
-#
-# Every query outside the current window keeps the SAME oracle via
-# tests/test_registry_oracle.py (the suite replays the driver's compare
-# for the full registry at sf0.001) and via the committed
-# CORRECTNESS_FULL.json (all queries, three SFs), so rotation trades
-# which slice gets the driver's hard signal, never which slice is
-# checked. tests/test_registry_oracle.py pins the first-50 set.
-# * r9 window: all 14 R9_PENDING post-r8 additions + the 4 new-in-r9
-#   operators + 32 r4-stale re-confirmations — all 50 green in
-#   CORRECTNESS_r09.json; the r1-r9 driver union covered 266/287 (the
-#   21 post-window r9 additions were judge-verified at sf0.01 and
-#   pinned as R10_PENDING).
-GATE_PRIORITY: list[str] = [
-    # --- r12 window: freshness rotation continues (the r11-verdict #2
-    # ask). Contents: the 3 R12_NEW queries gated at birth (the real
-    # RIFF/WAV container codec — r11-verdict #5 — plus the real ISO
-    # BMFF video demux + 'png '-codec frame decode and the real
-    # baseline-JPEG codec), the full 40-query R12_RECONFIRM_BACKLOG
-    # (the alphabetical tail of the r6-stale set, pinned last round —
-    # after these, no driver row predates r7), and 7 slots refreshing
-    # the oldest remaining rows (the 50 r7-stale greens, first 7 in
-    # name order; the other 43 are pinned as R13_RECONFIRM_BACKLOG in
-    # tests/test_registry_oracle.py).
-    # -- the 3 R12_NEW (real media codecs, gated at birth) --
-    "audio_wav_chunk_stats",
-    "video_mp4_frame_stats",
-    "image_jpeg_block_stats",
-    # -- the 40 r6-stale re-confirmations (R12_RECONFIRM_BACKLOG) --
-    "doc_exact_dedup",
-    "doc_language_guess",
-    "doc_near_dup_pairs",
-    "doc_prefix_filter_pairs",
-    "doc_signature_table_pairs",
-    "doc_signatures",
-    "doc_simhash_near_dup",
-    "doc_text_quality",
-    "doc_token_percentiles",
-    "doc_train_split",
-    "embedding_dup_clusters",
-    "event_audience_overlap_kmv",
-    "event_cost_model",
-    "event_heavy_hitters_cms",
-    "event_hourly_window",
-    "event_null_profile",
-    "event_projection_normalize",
-    "event_range_flags",
-    "events_asof_tolerance",
-    "events_from_customers",
-    "hourly_value_deviation",
-    "jdbc_live_roundtrip",
-    "knn_brute_force",
-    "knn_ivf",
-    "knn_ivfpq_adc",
-    "llm_corpus_pipeline_v3",
-    "order_dup_check",
-    "order_priority_pivot",
-    "orders_bloom_prefilter",
-    "peak_event_hours",
-    "purchase_graph_pagerank",
-    "regional_supplier_revenue",
-    "schema_merge_landing_stats",
-    "stream_event_sliding_window",
-    "stream_ivf_assignments",
-    "stream_multihop_topology",
-    "stream_pq_codes",
-    "stream_user_sessions",
-    "top_value_orders",
-    "urgent_open_orders",
-    # -- r7-stale re-confirmations (first 7 of 50 in name order; two of
-    # them, bpe_merge_candidates and contrastive_inbatch_pairs, are also
-    # the r11 bench's flagged wobbles — a fresh driver row settles both)
-    "basket_association_rules",
-    "bpe_merge_candidates",
-    "contrastive_inbatch_pairs",
-    "copurchase_triangle_stats",
-    "customer_rfm_segments",
-    "customer_similarity_topk",
-    "daily_seasonal_residuals",
-]
-
-
-def _apply_gate_priority() -> None:
-    """Reorder REGISTRY so GATE_PRIORITY comes first.
-
-    No-op while any prioritized query is still unregistered: importing a
-    family submodule directly (e.g. ``import queries_vectors``) re-enters
-    this module circularly BEFORE that family's decorators have run, so
-    each family module re-invokes this from its own tail — the last one
-    to finish registering applies the order. A wrong name in
-    GATE_PRIORITY would leave the order unapplied; the
-    ``test_gate_window_pinned`` test asserts the final first-50 order, so
-    that failure mode is loud."""
-    if any(n not in REGISTRY for n in GATE_PRIORITY):
-        return
-    ordered = {n: REGISTRY[n] for n in GATE_PRIORITY}
-    ordered.update({n: q for n, q in REGISTRY.items() if n not in ordered})
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_apply_gate_priority()
-
-
 _BLOOM_M = 16384  # bits
 _BLOOM_K = 3      # hash functions
 
@@ -4983,7 +4851,7 @@ def _lpa_oracle(iterations: int = 3) -> str:
     "argmax window whose fan-in is bounded by distinct neighbor "
     "labels; community stats are two hash joins of O(nodes) frames.",
     skip_bench=True,  # 3 sweeps x (join+window) on the sf0.1 purchase
-    # graph ~ triangle-scale work; timed by bench_staged.py instead
+    # graph ~ triangle-scale work
 )
 def purchase_graph_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.graph import label_propagation
@@ -5798,7 +5666,7 @@ def events_profile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "algorithm, so agreement checks the orientation logic, not just "
     "replay. Clustering coeff = 3*triangles/wedges.",
     skip_bench=True,  # 1.2M-edge graph at sf0.1 (~15 s) — profiling-scale
-    # work like doc_char_jaccard_pairs; timed by bench_staged.py instead
+    # work like doc_char_jaccard_pairs
 )
 def copurchase_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
@@ -7255,7 +7123,7 @@ _ALS_STAGE_SPARK = "CAST(CAST({e} AS STRING) AS DECIMAL(38,20))"
     "joined sweep frame (ru), and the item factors (vf) are lazily "
     "localCheckpoint-ed so each is computed once per action instead of "
     "once per consumer (the before-plan replayed the fact join per "
-    "half-step; see plans/r13).",
+    "half-step).",
 )
 def purchase_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
@@ -9107,87 +8975,6 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "total_revenue"
             ),
         )
-    )
-
-
-_REACH_BFS_CTE = """
-WITH RECURSIVE raw AS (
-    SELECT DISTINCT o.o_custkey AS a, l.l_suppkey + 1000000 AS b
-    FROM {lineitem} l JOIN {orders} o ON l.l_orderkey = o.o_orderkey
-),
-sym AS (SELECT a, b FROM raw UNION SELECT b AS a, a AS b FROM raw),
-seeds AS (
-    SELECT DISTINCT c_custkey AS node FROM {customer}
-    WHERE c_mktsegment = 'AUTOMOBILE'
-),
-bfs(node, hop) AS (
-    SELECT node, 0 AS hop FROM seeds
-    UNION ALL
-    SELECT DISTINCT s.b AS node, bfs.hop + 1 AS hop
-    FROM bfs JOIN sym s ON s.a = bfs.node
-    WHERE bfs.hop < 4
-),
-dist AS (SELECT node, min(hop) AS hop FROM bfs GROUP BY node)
-SELECT hop, CAST(count(*) AS BIGINT) AS n_nodes,
-       CAST(sum(CASE WHEN node > 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_suppliers,
-       CAST(sum(node) AS BIGINT) AS node_checksum
-FROM dist GROUP BY hop
-"""
-
-
-@query(
-    "segment_reach_bfs_cte",
-    oracle=_REACH_BFS_CTE.format(
-        lineitem="lineitem", orders="orders", customer="customer"
-    ),
-    description="Recursive-CTE twin of segment_reach_bfs: the SAME "
-    "multi-source BFS over the real symmetrized purchase graph, "
-    "value-locked against DuckDB's WITH RECURSIVE min-hop evaluation "
-    "(the oracle keeps the recursive SQL verbatim; "
-    "tests/test_properties.py::test_bfs_cte_twin_matches_handrolled "
-    "additionally asserts the two registry queries' outputs are "
-    "identical row-for-row). r13 optimization (guide §2, verdict #3): "
-    "the Spark side no longer executes the native UnionLoop fixpoint — "
-    "measured 6-9 s because the operator re-derives each level from "
-    "the FULL previous level without a visited-set anti-join (every "
-    "level re-emits all reachable nodes, ~|V| rows/level, plus 2 "
-    "exchanges per hop over an unshrinking relation; before-plan in "
-    "plans/r13/). It now runs ops.graph.bfs_hops' frontier loop — per "
-    "hop ONE edge join + ONE distinct + ONE anti-join against the "
-    "visited set, localCheckpoint-cut lineage, isEmpty early-stop — "
-    "whose frontier shrinks to newly-discovered nodes: O(|V|) total "
-    "node emissions vs the CTE's O(d*|V|). Same unrolled-algebra-vs-"
-    "recursive-oracle pattern as customer_er_em_params. Results are "
-    "provably identical: level-DISTINCT UNION ALL + final min(hop) "
-    "assigns every node its minimum hop distance, which is exactly "
-    "what the visited-set loop computes.",
-)
-def segment_reach_bfs_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from smartpool_bigdata_spark.ops.graph import bfs_hops
-
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    edges = (
-        li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + 1_000_000).alias("dst"),
-        )
-        .distinct()
-    )
-    seeds = (
-        _t(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "AUTOMOBILE")
-        .select(F.col("c_custkey").alias("node"))
-    )
-    dist = bfs_hops(edges, seeds, max_hops=4)
-    return dist.groupBy("hop").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
-        F.sum(F.when(F.col("node") > 1_000_000, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_suppliers"),
-        F.sum("node").cast("bigint").alias("node_checksum"),
     )
 
 
@@ -11257,5 +11044,3 @@ from smartpool_bigdata_spark import queries_text as _queries_text  # noqa: E402,
 from smartpool_bigdata_spark import queries_vectors as _queries_vectors  # noqa: E402,F401
 from smartpool_bigdata_spark import queries_streaming as _queries_streaming  # noqa: E402,F401
 from smartpool_bigdata_spark import queries_ingest as _queries_ingest  # noqa: E402,F401
-
-_apply_gate_priority()

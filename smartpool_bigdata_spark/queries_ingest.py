@@ -593,14 +593,6 @@ def sensor_feed_stream_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Re-apply the gate-priority order now this family is fully registered —
-# covers direct imports of this module, which enter queries.py circularly
-# before these decorators have run (see queries._apply_gate_priority).
-from smartpool_bigdata_spark.queries import _apply_gate_priority as __reorder  # noqa: E402
-
-__reorder()
-
-
 @query(
     "ledger_roundtrip_stats",
     oracle="""
@@ -922,9 +914,6 @@ def bootstrap_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
         shutil.rmtree(stage, ignore_errors=True)
 
 
-__reorder()
-
-
 @query(
     "compact_maintenance_stats",
     oracle="""
@@ -980,9 +969,6 @@ def compact_maintenance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)  # materialize before cleanup
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-__reorder()
 
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
@@ -1185,9 +1171,6 @@ def scale_conf_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-__reorder()
-
-
 @query(
     "dpp_partition_pruned_join",
     oracle="""
@@ -1361,6 +1344,3 @@ def ledger_vacuum_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-__reorder()

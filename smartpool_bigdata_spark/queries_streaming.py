@@ -281,9 +281,6 @@ def stream_static_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Re-apply the gate-priority order now this family is fully registered —
-# covers direct imports of this module, which enter queries.py circularly
-# before these decorators have run (see queries._apply_gate_priority).
 @query(
     "stream_merge_upsert_roundtrip",
     oracle="""
@@ -562,11 +559,6 @@ def stream_purchase_attribution_outer(spark: SparkSession, sf_dir: str) -> DataF
     return spark.table(name)
 
 
-from smartpool_bigdata_spark.queries import _apply_gate_priority as __reorder  # noqa: E402
-
-__reorder()
-
-
 @query(
     "stream_dq_quarantine",
     oracle="""
@@ -804,9 +796,6 @@ def stream_multihop_topology(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)  # materialize before cleanup
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-__reorder()
 
 
 @query(
@@ -1168,9 +1157,6 @@ def stream_dedup_reappear(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-__reorder()
-
-
 @query(
     "stream_update_mode_counts",
     oracle="""
@@ -1196,8 +1182,7 @@ __reorder()
     "single-batch contribution, recovered from consecutive trace "
     "deltas and recomputed by the oracle from the same split) pins "
     "that the trace's intermediate values are the exact prefix sums "
-    "of the batch partition. Empirically pinned in "
-    "scripts/proto_r8_modes.py. Scale: update mode is the dashboard- "
+    "of the batch partition. Scale: update mode is the dashboard- "
     "sink contract — state is one row per key, emissions are deltas; "
     "unlike append it needs no watermark to emit, unlike complete it "
     "never rewrites the world.",
@@ -1254,8 +1239,8 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "REWRITES the memory sink with the full reranked result, so after "
     "the AvailableNow drain the sink holds exactly the batch-twin "
     "top-10 (deterministic total order: count desc, then key). "
-    "Empirically pinned in scripts/proto_r8_modes.py. Scale: complete "
-    "mode re-emits O(output) per batch — viable precisely because the "
+    "Scale: complete mode re-emits O(output) per batch — viable "
+    "precisely because the "
     "query bounds output to k rows via TakeOrderedAndProject over the "
     "keyed state store, never because the corpus is small; the state "
     "is one row per (type, hour) cell.",
@@ -1500,6 +1485,3 @@ def stream_conformal_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.localCheckpoint(eager=True)  # materialize before cleanup
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-__reorder()

@@ -3595,14 +3595,6 @@ def doc_embedding_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Re-apply the gate-priority order now this family is fully registered —
-# covers direct imports of this module, which enter queries.py circularly
-# before these decorators have run (see queries._apply_gate_priority).
-from smartpool_bigdata_spark.queries import _apply_gate_priority as __reorder  # noqa: E402
-
-__reorder()
-
-
 _V3_SEQ = 512  # packed-sequence length for the final accounting stage
 
 
@@ -3886,9 +3878,6 @@ def llm_corpus_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-__reorder()
-
-
 @query(
     "corpus_packing_manifest",
     oracle=f"""
@@ -3970,9 +3959,6 @@ def corpus_packing_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("pad_tokens"),
     )
-
-
-__reorder()
 
 
 @query(
@@ -4460,9 +4446,6 @@ def image_jpeg_block_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("px_min").cast("int").alias("px_min"),
         F.max("px_max").cast("int").alias("px_max"),
     )
-
-
-__reorder()
 
 
 def _prefix_filter_oracle(t_num: int = 3, t_den: int = 5, k: int = 3) -> str:
@@ -6040,9 +6023,6 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-__reorder()
-
-
 @query(
     "classifier_calibration_eval",
     oracle=f"""
@@ -6180,9 +6160,6 @@ def classifier_calibration_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-__reorder()
-
-
 def _cluster_cohesion_oracle() -> str:
     return f"""{_dup_clusters_cte_prefix()},
     csz AS (
@@ -6257,9 +6234,6 @@ def dup_cluster_cohesion_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (4 * F.col("n_edges") >= poss).alias("cohesive"),
     )
-
-
-__reorder()
 
 
 def _lsh_scurve_oracle() -> str:
@@ -6398,9 +6372,6 @@ def lsh_scurve_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-__reorder()
-
-
 @query(
     "doc_cdc_chunks",
     oracle=f"""
@@ -6507,9 +6478,6 @@ def doc_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-__reorder()
-
-
 @query(
     "vocab_coverage_eval",
     oracle=f"""
@@ -6590,9 +6558,6 @@ def vocab_coverage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("oov_rate"),
         )
     )
-
-
-__reorder()
 
 
 @query(
@@ -6923,6 +6888,3 @@ def vocab_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vocab",
         )
     )
-
-
-__reorder()

@@ -2308,14 +2308,6 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Re-apply the gate-priority order now this family is fully registered —
-# covers direct imports of this module, which enter queries.py circularly
-# before these decorators have run (see queries._apply_gate_priority).
-from smartpool_bigdata_spark.queries import _apply_gate_priority as __reorder  # noqa: E402
-
-__reorder()
-
-
 @query(
     "embedding_dbscan_2d",
     oracle="""
@@ -2403,6 +2395,3 @@ def embedding_dbscan_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "role",
         F.col("component").cast("bigint").alias("component"),
     )
-
-
-__reorder()

@@ -529,9 +529,6 @@ def test_r9_additions_plan_posture(plans):
         # Q15: one suppkey hash agg, scalar max broadcast crossJoined,
         # supplier names broadcast — never a global window
         "top_revenue_supplier",
-        # BFS CTE twin (r13: Spark side runs the bfs_hops frontier loop,
-        # not the UnionLoop); the lock covers the dist/histogram tail
-        "segment_reach_bfs_cte",
         # Q7: nation-filtered dims broadcast twice (supplier + customer
         # roles), one orderkey shuffle
         "bilateral_shipping_volume",

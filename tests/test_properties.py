@@ -772,24 +772,6 @@ def test_bfs_hops_matches_model(spark, edge_list, seed_ids, max_hops):
     assert got == want
 
 
-def test_bfs_cte_twin_matches_handrolled(spark):
-    """segment_reach_bfs_cte (Spark 4 WITH RECURSIVE, level-DISTINCT
-    UNION ALL + min-hop) and segment_reach_bfs (ops.graph.bfs_hops'
-    iterate-and-localCheckpoint loop) are two implementations of the
-    SAME frontier over the real purchase graph — their per-hop stats
-    must be identical row-for-row. This cross-checks the engine's
-    native fixpoint operator against the hand-rolled Pregel loop."""
-    from smartpool_bigdata_spark.queries import REGISTRY
-    from tests.conftest import SF_DIR
-
-    def rows(name):
-        return sorted(
-            tuple(r) for r in REGISTRY[name].build(spark, SF_DIR).collect()
-        )
-
-    assert rows("segment_reach_bfs_cte") == rows("segment_reach_bfs")
-
-
 @settings(**SETTINGS)
 @given(
     st.lists(

@@ -35,212 +35,3 @@ def test_runner_ingest_silver_query(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "pricing_summary" in out
 
-
-def test_bench_compact_line_bounded_at_any_registry_size():
-    """The driver parses bench stdout from a 2000-char tail; the compact
-    line must stay under budget and keep the slowest queries no matter
-    how large the registry grows (round 3 shipped an unparseable 2400-
-    char line)."""
-    import json
-
-    from bench import compact_line
-
-    full = {
-        "metric": "total_query_sec",
-        "value": 123.456,
-        "unit": "sec",
-        "queries": {f"query_with_a_long_name_{i:03d}": round(i * 0.013, 3) for i in range(400)},
-        "queries_first_run": {f"query_with_a_long_name_{i:03d}": 1.0 for i in range(400)},
-        "value_first_run": 400.0,
-        "value_r2_subset": 17.8,
-        "n_queries": 400,
-        "sf": 0.1,
-    }
-    line = compact_line(full)
-    assert len(line) <= 1800
-    d = json.loads(line)
-    assert d["metric"] == "total_query_sec" and d["value"] == 123.456
-    assert "queries_first_run" not in d  # cold map lives in BENCH_FULL.json
-    assert d["queries_omitted"] == 400 - len(d["queries"]) > 0
-    # slowest-first retention: the max-timing query must be present
-    assert "query_with_a_long_name_399" in d["queries"]
-
-    # a small registry fits entirely
-    small = dict(full, queries={"a": 1.0, "b": 2.0}, queries_first_run={})
-    d2 = json.loads(compact_line(small))
-    assert d2["queries_omitted"] == 0 and len(d2["queries"]) == 2
-
-    # the per-query n_runs map stays in BENCH_FULL.json, but the small
-    # stall disclosures survive into the hard-signal line
-    noisy = dict(
-        small,
-        queries_n_runs={"a": 2, "b": 4},
-        stall_retried=["b"],
-        still_above_prior=[],
-    )
-    d3 = json.loads(compact_line(noisy))
-    assert "queries_n_runs" not in d3
-    assert d3["stall_retried"] == ["b"]
-    assert d3["still_above_prior"] == []
-
-
-def test_bench_compact_line_caps_disclosure_lists():
-    """r12 verdict #2/#4: at 8 cores the unbounded stall_retried /
-    fresh_session_remeasured lists alone exceeded the 1800-char budget
-    and the driver got ZERO per-query timings. The compact line must
-    carry every list as count + bounded sample and still fit >=25 of the
-    slowest timings."""
-    import json
-
-    from bench import compact_line
-
-    long_names = [f"query_with_a_very_long_name_{i:03d}" for i in range(60)]
-    full = {
-        "metric": "total_query_sec",
-        "value": 162.0,
-        "unit": "sec",
-        "queries": {n: round(0.5 + i * 0.013, 3)
-                    for i, n in enumerate(long_names * 4)},  # 60 uniq names
-        "value_first_run": 280.0,
-        "value_r2_subset": 16.5,
-        "value_r5_headline_subset": 49.1,
-        "value_r7_headline_subset": 126.3,
-        "host_factor_jvm": 0.983,
-        "value_r2_subset_normalized": 16.8,
-        "value_r5_headline_subset_normalized": 50.0,
-        "value_r7_headline_subset_normalized": 128.5,
-        "canary_rel_jvm": 1.0,
-        "canary_rel_arrow": 1.0,
-        "stall_retried": long_names[:47],
-        "fast_retried": long_names[:12],
-        "fresh_session_remeasured": long_names[:35],
-        "still_above_prior": long_names[:8],
-        "fresh_canary_jvm_sec": 0.531,
-        "fresh_canary_arrow_sec": 0.892,
-        "n_queries": 233,
-        "sf": 0.1,
-        "canary_jvm_sec": 0.623,
-        "canary_arrow_sec": 0.878,
-    }
-    line = compact_line(full)
-    assert len(line) <= 1800
-    d = json.loads(line)
-    assert len(d["queries"]) >= 25, len(d["queries"])
-    assert d["stall_retried_n"] == 47 and len(d["stall_retried"]) <= 5
-    assert d["fresh_session_remeasured_n"] == 35
-    assert len(d["fresh_session_remeasured"]) <= 5
-    # the slowest query always survives
-    slowest = max(full["queries"], key=full["queries"].get)
-    assert slowest in d["queries"]
-
-
-def test_bench_fast_tail_symmetry():
-    """r12 verdict #8: the retry protocol fires on both tails. A lone
-    reading below prior/1.5 is re-run; if never reproduced it is
-    excluded from the committed min; two sub-bar runs confirm a genuine
-    improvement at no extra cost."""
-    from bench import committed_value, fast_unconfirmed
-
-    # lone fast fluke -> earns retries up to 4 total
-    assert fast_unconfirmed([2.0, 7.9], prior=8.0)
-    assert fast_unconfirmed([2.0, 7.9, 8.0], prior=8.0)
-    assert not fast_unconfirmed([2.0, 7.9, 8.0, 8.1], prior=8.0)  # cap
-    # confirmed improvement (both runs low) -> no retry
-    assert not fast_unconfirmed([2.0, 2.1], prior=8.0)
-    # no prior, or reading within the band -> no retry
-    assert not fast_unconfirmed([2.0, 2.1], prior=None)
-    assert not fast_unconfirmed([6.0, 7.0], prior=8.0)
-    # sub-floor absolute deltas never fire
-    assert not fast_unconfirmed([0.01, 0.09], prior=0.09)
-
-    # committed value: unconfirmed lone outlier excluded...
-    assert committed_value([2.0, 7.9, 8.0, 8.1], prior=8.0) == 7.9
-    # ...confirmed improvement keeps the plain min...
-    assert committed_value([2.0, 2.1], prior=8.0) == 2.0
-    # ...and the no-outlier / no-prior paths are the plain min too
-    assert committed_value([7.9, 8.2], prior=8.0) == 7.9
-    assert committed_value([2.0, 7.9], prior=None) == 2.0
-
-
-def test_bench_stall_retry_predicate():
-    """Stall-proofing (r10 verdict #1): readings >1.5x their prior
-    steady value (by an absolute >0.1 s) earn extra materializations,
-    capped at 4 total; new queries and sub-noise-floor wobbles don't."""
-    from bench import needs_retry
-
-    assert needs_retry(3.0, 1.5, runs=2)          # 2x prior -> retry
-    assert not needs_retry(3.0, 1.5, runs=4)      # cap reached
-    assert not needs_retry(2.0, 1.5, runs=2)      # within 1.5x band
-    assert not needs_retry(3.0, None, runs=2)     # no prior (new query)
-    assert not needs_retry(0.09, 0.05, runs=2)    # >1.5x but sub-floor
-    assert needs_retry(0.26, 0.1, runs=3)         # 2.6x and above floor
-
-
-def test_bench_python_path_classifier_and_canary_rel():
-    """r11 verdict #1: the retry yardstick keys on the canary matching
-    the query's execution path. Pure pieces: plan-string classification
-    and the clamped never-scale-down prior factor."""
-    from bench import canary_rel, is_python_path
-
-    assert is_python_path("+- MapInPandas gen(...)")
-    assert is_python_path("FlatMapGroupsInPandasWithState")
-    assert is_python_path("ArrowEvalPython [f(x)]")
-    assert not is_python_path("+- HashAggregate(keys=[k])\n+- Exchange")
-    # host 30% slower on this path -> priors scale up 1.3x
-    assert canary_rel(0.964, 0.749) == 0.964 / 0.749
-    # faster host never scales priors DOWN
-    assert canary_rel(0.5, 0.749) == 1.0
-    # clamped at 3x; missing prior -> neutral
-    assert canary_rel(9.0, 1.0) == 3.0
-    assert canary_rel(1.0, None) == 1.0
-
-
-def test_bench_python_path_classifier_against_real_plans(spark):
-    """The classifier reads ANALYZED plan strings; pin it against real
-    plans from both paths so a Spark rename of the logical node name
-    fails here, not silently in the bench."""
-    from pyspark.sql import functions as F
-
-    from bench import is_python_path
-
-    jvm_df = spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
-    assert not is_python_path(
-        jvm_df._jdf.queryExecution().analyzed().toString()
-    )
-
-    arrow_df = spark.range(10).mapInPandas(
-        lambda it: it, schema="id long"
-    )
-    assert is_python_path(
-        arrow_df._jdf.queryExecution().analyzed().toString()
-    )
-
-
-def test_bench_fresh_session_eligibility():
-    """End-of-run isolation picks up (a) the 1.3x band and (b) large
-    absolute movers >=1.25x and >=0.25 s, while exempting subsecond
-    wobble and anything without a same-SF prior."""
-    from bench import above_prior, fresh_eligible
-
-    timings = {
-        "big_30pct": 1.98,      # prior 1.50 -> 1.32x, delta .48 -> both
-        "big_27pct": 2.55,      # prior 2.00 -> 1.27x, delta .55 -> abs
-        "small_wobble": 0.46,   # prior 0.35 -> 1.31x, delta .11 -> band
-        "tiny_wobble": 0.13,    # prior 0.09 -> 1.44x, delta .04 -> floor
-        "steady": 1.00,         # prior 1.00
-        "new_query": 9.99,      # no prior
-    }
-    prior = {
-        "big_30pct": 1.50,
-        "big_27pct": 2.00,
-        "small_wobble": 0.35,
-        "tiny_wobble": 0.09,
-        "steady": 1.00,
-    }
-    assert fresh_eligible(timings, prior) == [
-        "big_27pct", "big_30pct", "small_wobble",
-    ]
-    # the disclosure bar stays 1.5x: only readings still above it after
-    # everything else report as genuine movers
-    assert above_prior(timings, prior) == []
-    assert above_prior({"x": 3.1}, {"x": 2.0}) == ["x"]

@@ -50,7 +50,6 @@ MEASURED_RATIO = {
     "knn_brute_force": 72.617,
     "embedding_pca_whitened": 94.727,
     "purchase_graph_pagerank": 0.173,
-    "segment_reach_bfs": 0.109,
     "event_type_stats_salted": 10.222,
     "events_in_incident_windows": 1.632,
     "doc_bm25_topk": 0.08,
@@ -92,13 +91,11 @@ MEASURED_RATIO = {
     # the 5-gram explode IS the shuffle (vocab agg of exploded grams
     # over a 0.003 MB pruned text scan); absolute bytes 0.63 MB
     "vocab_good_turing": 184.299,
-    # r13: segment_reach_bfs_cte's Spark side now runs the same
-    # bfs_hops frontier loop as the hand-rolled twin (the native
-    # UnionLoop fixpoint re-emitted every reachable node per level —
-    # 72.057 ratio, 9.7 MB absolute — see plans/r13 and
-    # OPTIMIZATION_r13.md); both twins now pin the checkpoint-scan
-    # traversal ratio
-    "segment_reach_bfs_cte": 0.107,
+    # bfs_hops frontier loop: one edge join + distinct + anti-join per
+    # hop over a shrinking frontier, pinning the checkpoint-scan
+    # traversal ratio (Spark's native recursive-CTE UnionLoop over the
+    # same graph re-emitted every reachable node per level — 72.057
+    # ratio, 9.7 MB absolute)
     "segment_reach_bfs": 0.107,
     # log2(key)-level ancestor chain: each level joins a shrinking
     # frontier against broadcast orders; 0.31 MB absolute
