@@ -1,16 +1,14 @@
-"""Iterative graph operators on DataFrames: connected components via
-min-label propagation (the "HashMin" algorithm) — the step that turns
-near-duplicate PAIRS into duplicate CLUSTERS so a dedup pipeline can keep
-one representative per cluster.
+"""Iterative graph operators on DataFrames. ``connected_components`` is
+the step that turns near-duplicate PAIRS into duplicate CLUSTERS so a
+dedup pipeline can keep one representative per cluster.
 
-Scale: each iteration is one join + one aggregate (two key-shuffles);
-iteration count = graph diameter, which for near-dup graphs is tiny (dup
-clusters are stars/short chains). Lineage is cut per iteration with
-``localCheckpoint`` or the loop would build an exponentially deep plan.
-For web-scale graphs with long chains, ``connected_components_two_phase``
-(alternating large-star/small-star, Kiveris et al. SoCC'14) converges in
-~log2(n) rounds instead of diameter iterations — property-tested
-equivalent to HashMin on random graphs; pick by expected diameter.
+Scale: every operator here is a driver loop of join + aggregate rounds
+(key shuffles on node id), one dataflow plan per round, with lineage
+cut each round by ``localCheckpoint`` — without the cut the loop would
+build an exponentially deep plan. Connected components uses alternating
+large-star/small-star (Kiveris et al. SoCC'14), which converges in
+~log2(n) rounds on any graph, long chains included, so there is one
+algorithm for near-dup stars and web-scale graphs alike.
 """
 
 from __future__ import annotations
@@ -23,91 +21,33 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iterations: int = 25,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Undirected connected components. ``edges`` holds one row per pair;
-    returns (node, component) where component = the smallest node id in
-    the node's component. Deterministic. Raises if the diameter exceeds
-    ``max_iterations`` (no silent partial convergence).
-    """
-    sym = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    sym = sym.localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    iterations = 0
-    for _ in range(max_iterations):
-        iterations += 1
-        nbr_min = (
-            sym.join(labels, sym["a"] == labels["node"])
-            .groupBy(F.col("b").alias("node2"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.withColumnRenamed("label", "new_label")
-            .join(labels, "node")
-            .filter(F.col("new_label") != F.col("label"))
-        )
-        done = changed.isEmpty()
-        labels = new_labels
-        if done:
-            if stats is not None:
-                stats["iterations"] = iterations
-            return labels.select("node", F.col("label").alias("component"))
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iterations} iterations"
-    )
-
-
-def connected_components_two_phase(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     max_rounds: int = 20,
     stats: dict | None = None,
 ) -> DataFrame:
     """Undirected connected components via alternating large-star /
     small-star (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the web-scale alternative to ``connected_components``.
+    Beyond", SoCC'14). ``edges`` holds one row per pair; returns (node,
+    component) where component = the smallest node id in the node's
+    component, for every node the input mentions (self-loop-only nodes
+    come back as singletons). Deterministic; property-tested against a
+    union-find model on random graphs (``tests/test_properties.py``).
 
-    Same contract as HashMin: returns (node, component) with component =
-    the smallest node id in the node's component, deterministic
-    (property-tested equivalent on random graphs,
-    ``tests/test_properties.py``). Different convergence behavior:
+    Large-star/small-star contracts path length geometrically: each
+    round rewires every node toward its neighborhood minimum, and the
+    proof in the paper bounds total rounds by O(log^2 n) — measured
+    ~log2(n)+2 on worst-case chains: 256-chain → 9 rounds, 1024 → 11,
+    4096 → 13, 16384 → 15 (incl. the final no-change round), where
+    min-label propagation needs n iterations (measured 65 on a 64-chain;
+    SCALE.md §6). Raises after ``max_rounds`` (no silent partial
+    convergence).
 
-    * HashMin runs ``diameter`` iterations — right for near-dup graphs
-      (stars/short chains, diameter ≤ ~5), degenerate on billion-edge
-      graphs with long paths (a 10^6-node chain needs 10^6 joins).
-    * Large-star/small-star contracts path length geometrically: each
-      round rewires every node toward its neighborhood minimum, and the
-      proof in the paper bounds total rounds by O(log^2 n) — measured
-      ~log2(n)+2 on worst-case chains: 256-chain → 9 rounds, 1024 → 11,
-      4096 → 13, 16384 → 15 (incl. the final no-change round), where
-      HashMin needs n iterations (measured 65 on a 64-chain; SCALE.md §6).
-
-    Per round: two star ops, each ONE groupBy-min + ONE join on node id
-    (same shuffle shape as a HashMin step), edge count monotonically
-    non-increasing after round 1 — no state beyond the edge list itself.
-    Lineage is cut per round with ``localCheckpoint``. Convergence test =
-    (count, xxhash64-xor) checksum equality of the rewired edge list,
-    confirmed with an exact EXCEPT-based comparison before returning, so
-    a checksum collision can delay but never corrupt the result.
+    Per round: two star ops, each ONE groupBy-min + ONE join on node id,
+    edge count monotonically non-increasing after round 1 — no state
+    beyond the edge list itself. Lineage is cut per round with
+    ``localCheckpoint``. Convergence test = (count, xxhash64-xor)
+    checksum equality of the rewired edge list with the previous
+    round's, confirmed by an exact EXCEPT of the two checkpointed lists,
+    so a checksum collision can delay but never corrupt the result.
 
     large-star(u): connect every neighbor v > u to min(Γ⁺(u));
     small-star(u): connect every neighbor v ≤ u (and u) to min(Γ⁺(u)),
@@ -115,22 +55,24 @@ def connected_components_two_phase(
     At the fixed point the edge list is a forest of depth-1 stars rooted
     at component minima.
     """
-    raw = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+    # one checkpoint of the input: the node set and the edge list both
+    # derive from it, so an uncheckpointed upstream plan (an LSH pair
+    # stage) runs once, not once per derived frame
+    raw = (
+        edges.select(
+            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
     )
     # every node mentioned in the input — self-loop-only nodes must still
-    # come back as singleton components (same contract as HashMin)
+    # come back as singleton components
     all_nodes = (
         raw.select(F.col("a").alias("node"))
         .union(raw.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    e = (
-        raw.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = raw.filter(F.col("a") != F.col("b"))
     if e.isEmpty():
         return all_nodes.withColumn("component", F.col("node"))
 
@@ -168,27 +110,22 @@ def connected_components_two_phase(
         centers = mins.select(F.col("u").alias("a"), F.col("m").alias("b"))
         return children.union(centers).filter(F.col("a") != F.col("b")).distinct()
 
-    prev_sig = None
-    cur = e
+    cur, cur_sig = e, None
     for rounds in range(1, max_rounds + 1):
-        cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
-        sig = _checksum(cur)
-        if sig == prev_sig:
+        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
+        sig = _checksum(nxt)
+        # checksum said fixed point — confirm exactly on the two
+        # checkpointed lists (a collision costs a round, never a wrong
+        # component map); equal counts + one-way EXCEPT of distinct
+        # lists is equality, and nxt = star(cur) = cur is the fixed point
+        if sig == cur_sig and nxt.exceptAll(cur).isEmpty():
             if stats is not None:
                 stats["rounds"] = rounds
             break
-        prev_sig = sig
+        cur, cur_sig = nxt, sig
     else:
         raise RuntimeError(
-            f"two-phase connected components did not converge in {max_rounds} rounds"
-        )
-    # checksum said fixed point — confirm exactly (collisions must never
-    # produce a wrong component map, only a retry)
-    nxt = _small_star(_large_star(cur))
-    if not cur.exceptAll(nxt).isEmpty() or not nxt.exceptAll(cur).isEmpty():
-        raise RuntimeError(
-            "checksum converged but edge list still changing — "
-            "xxhash64 collision; raise max_rounds and re-run"
+            f"connected_components did not converge in {max_rounds} rounds"
         )
     roots = (
         cur.select(F.col("b").alias("node"))
@@ -233,7 +170,7 @@ def connected_components_incremental(
     component.
 
     Plan shape: ONE scan of the assignment (semi-joined down to touched
-    nodes by the broadcast new-edge node set), a two-phase CC over the
+    nodes by the broadcast new-edge node set), a CC over the
     tiny contracted graph, and one broadcast remap join back — the
     corpus-sized frame is never shuffled on graph structure.
     """
@@ -261,7 +198,7 @@ def connected_components_incremental(
             F.coalesce("rb", F.col("b")).alias("dst"),
         )
     )
-    remap = connected_components_two_phase(
+    remap = connected_components(
         contracted, max_rounds=max_rounds
     ).localCheckpoint(eager=True)
     # base rows: touched components re-root, untouched pass through
@@ -306,10 +243,10 @@ def pagerank(
     Fixed iteration count rather than convergence-test because (a) the
     result is then a pure function of the input — SQL-oracle
     expressible as a chain of per-iteration CTEs, giving the iterative
-    family a full value-hash gate where HashMin/two-phase CC settle for
-    structural checks — and (b) production PageRank at corpus scale is
-    run with a fixed budget anyway (power iteration gains a fixed
-    ~damping^k error factor per step regardless of graph size).
+    family a full value-hash gate — and (b) production PageRank at
+    corpus scale is run with a fixed budget anyway (power iteration
+    gains a fixed ~damping^k error factor per step regardless of graph
+    size).
 
     Cross-engine determinism: the per-node contribution sum is the only
     order-dependent float reduction, so each addend is cast to
@@ -323,8 +260,9 @@ def pagerank(
     Scale: degree table and weighted edge list are built once
     (localCheckpoint cuts the loop's lineage); each iteration is ONE
     join of the rank vector onto the weighted edges + ONE groupBy-sum —
-    two key-shuffles, the same shape as a HashMin step. The rank vector
-    is O(nodes) and never collected; iteration count is a constant.
+    two key-shuffles, the shape of one ``connected_components`` star op.
+    The rank vector is O(nodes) and never collected; iteration count is
+    a constant.
     """
     sym = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")

@@ -235,14 +235,6 @@ def duck_minhash_sig(hashes: str, n_perm: int = N_PERM) -> str:
     )
 
 
-def spark_band_hash(sig: str, band: int, rows: int = ROWS_PER_BAND) -> str:
-    start = band * rows + 1
-    return (
-        f"md5(array_join(transform(slice({sig}, {start}, {rows}), "
-        f"x -> cast(x as string)), ','))"
-    )
-
-
 def duck_band_hash(sig: str, band: int, rows: int = ROWS_PER_BAND) -> str:
     start = band * rows + 1
     return f"md5(array_to_string({sig}[{start}:{start + rows - 1}], ','))"
@@ -1100,8 +1092,8 @@ def incremental_dedup_batch(
         )
         if assignment_path is not None and not pairs.isEmpty():
             from smartpool_bigdata_spark.ops.graph import (
+                connected_components,
                 connected_components_incremental,
-                connected_components_two_phase,
             )
 
             if _exists(spark, assignment_path):
@@ -1110,9 +1102,7 @@ def incremental_dedup_batch(
                     asg, pairs, src="doc_a", dst="doc_b", changes_only=True
                 )
             else:
-                delta = connected_components_two_phase(
-                    pairs, src="doc_a", dst="doc_b"
-                )
+                delta = connected_components(pairs, src="doc_a", dst="doc_b")
             merge_upsert(spark, assignment_path, delta, keys=["node"])
     finally:
         # incremental_minhash_pairs persists its own handle on the (here

@@ -31,38 +31,15 @@ def spark_dot(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
 
 
-def duck_dot(a: str, b: str) -> str:
-    return f"list_dot_product({a}, {b})"
-
-
 def spark_cosine(a: str, b: str) -> str:
     return (
         f"{spark_dot(a, b)} / (sqrt({spark_dot(a, a)}) * sqrt({spark_dot(b, b)}))"
     )
 
 
-def duck_cosine(a: str, b: str) -> str:
-    return f"{duck_dot(a, b)} / (sqrt({duck_dot(a, a)}) * sqrt({duck_dot(b, b)}))"
-
-
 def as_double_array(df: DataFrame, col: str, out: str) -> DataFrame:
     """float32 embeddings → array<double> so fold arithmetic is stable."""
     return df.withColumn(out, F.expr(f"transform({col}, x -> cast(x as double))"))
-
-
-def l2_normalize(df: DataFrame, vec_col: str, out: str) -> DataFrame:
-    """Pre-normalize once so cosine degenerates to a single dot fold per
-    pair — at n·q pairs this saves 2 of 3 folds vs computing norms inline."""
-    return df.withColumn(
-        out,
-        F.expr(
-            f"transform({vec_col}, x -> x / sqrt({spark_dot(vec_col, vec_col)}))"
-        ),
-    )
-
-
-def duck_l2_normalize(vec: str) -> str:
-    return f"list_transform({vec}, x -> x / sqrt({duck_dot(vec, vec)}))"
 
 
 def brute_force_knn(
@@ -413,94 +390,8 @@ def covariance_matrix(
     ddof: int = 1,
 ) -> DataFrame:
     """Upper-triangle sample covariance of an embedding column:
-    (i, j, cov) rows for 1 <= i <= j <= d, 1-indexed.
-
-    Two passes: per-dimension means (one agg), then centered products
-    generated IN-ROW with a nested sequence transform (d(d+1)/2 structs
-    per row, one explode) and summed decimal-stable — no self-join, one
-    shuffle on the (i, j) key, bit-identical under any partitioning so
-    the DuckDB oracle hash-matches. The means ride in as one broadcast
-    array row.
-
-    Scale: at d=64 this is a 2080× row fan-out ahead of a map-side-
-    combined agg — scan-dominated and fine. At d in the thousands the
-    fan-out (d²/2) dominates; the swap is a ``mapInPandas`` partial
-    X^T X per Arrow batch (d² floats per partition, exactness traded for
-    one fewer shuffle), the same exact→approx/partial swap family as
-    SCALE.md's percentile entry.
-    """
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    # One driver-side scalar pass validates shape AND counts rows: a
-    # ragged array (element_at past the end -> NULL) or a null element
-    # silently drops out of the decimal sums while the denominator stays
-    # the global n - ddof, biasing the output — fail loudly instead,
-    # matching the n <= ddof guard below.
-    chk = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.size(vec_col)).alias("lo"),
-        F.max(F.size(vec_col)).alias("hi"),
-        F.max(F.exists(vec_col, lambda x: x.isNull()).cast("int")).alias("has_null"),
-    ).first()
-    n = chk["n"]
-    if n <= ddof:
-        # dividing by n - ddof would emit Infinity rows that poison any
-        # downstream eigendecomposition with NaNs — fail loudly instead
-        raise ValueError(
-            f"covariance_matrix needs more than ddof={ddof} rows, got {n}"
-        )
-    if chk["lo"] != dim or chk["hi"] != dim:
-        raise ValueError(
-            f"covariance_matrix needs uniform {vec_col} length {dim}, "
-            f"got lengths in [{chk['lo']}, {chk['hi']}]"
-        )
-    if chk["has_null"]:
-        raise ValueError(
-            f"covariance_matrix: {vec_col} contains null elements"
-        )
-    ex = df.select(F.posexplode(vec_col).alias("i0", "x"))
-    means = ex.groupBy("i0").agg(
-        (F.sum(F.col("x").cast("double").cast("decimal(38,10)")).cast("double")
-         / F.count("x")).alias("m")
-    )
-    marr = means.agg(
-        F.expr("transform(array_sort(collect_list(struct(i0, m))), s -> s.m)").alias(
-            "marr"
-        )
-    )
-    prods = (
-        df.select(vec_col)
-        .crossJoin(F.broadcast(marr))
-        .select(
-            F.explode(
-                F.expr(
-                    f"flatten(transform(sequence(1, {dim}), i -> "
-                    f"transform(sequence(i, {dim}), j -> struct(i as i, j as j, "
-                    f"(cast(element_at({vec_col}, i) as double) - element_at(marr, i)) * "
-                    f"(cast(element_at({vec_col}, j) as double) - element_at(marr, j)) as v))))"
-                )
-            ).alias("p")
-        )
-        .select("p.i", "p.j", "p.v")
-    )
-    return (
-        prods.groupBy("i", "j")
-        .agg(
-            (F.sum(F.col("v").cast("decimal(38,10)")).cast("double")
-             / F.lit(n - ddof)).alias("cov")
-        )
-    )
-
-
-def covariance_matrix_partial(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    ddof: int = 1,
-) -> DataFrame:
-    """Large-d twin of ``covariance_matrix``: same (i, j, cov) upper
-    triangle, computed as partial centered X^T X per Arrow batch via
-    ``mapInPandas`` instead of a d^2/2 in-row fan-out.
+    (i, j, cov) rows for 1 <= i <= j <= d, 1-indexed, computed as
+    partial centered X^T X per Arrow batch via ``mapInPandas``.
 
     Shape: (1) the per-dimension means ride in as a d-double closure
     constant (one decimal-stable agg + collect — driver-side scalars,
@@ -508,18 +399,22 @@ def covariance_matrix_partial(
     partial ``(X - mu)^T (X - mu)`` (a float64 BLAS matmul), emitted as
     d(d+1)/2 rows per PARTITION, not per input row; (3) one tiny
     (i, j)-keyed reduce (partitions x 2080 rows at d=64) finishes the
-    sum decimal-stably. The per-row fan-out of the exact form is gone —
-    at d=4096 the partial rows are partitions x 8.4M vs rows x 8.4M,
-    the difference between a 100 TB shuffle and a few GB one. Centering
-    by the true means keeps the per-batch float64 sums cancellation-free,
-    so the result agrees with the exact decimal form to ~1e-12 relative
-    (property-locked in tests/test_vector_ops.py); within-batch float
+    sum decimal-stably. An in-row d^2/2 fan-out would emit rows x 8.4M
+    products at d=4096 where this emits partitions x 8.4M — the
+    difference between a 100 TB shuffle and a few GB one (and 0.55 vs
+    1.45 s already at d=64/sf0.1, PERF.md). Centering by the true means
+    keeps the per-batch float64 sums cancellation-free, so the result
+    agrees with an exact decimal fold to ~1e-12 relative (locked
+    against numpy in tests/test_vector_ops.py); within-batch float
     association is the only nondeterminism, bounded far below the 6
-    decimals any consumer rounds to.
+    decimals any consumer (and the DuckDB oracle) rounds to.
 
-    Fail-loud posture matches ``covariance_matrix``: ragged vectors or
-    null elements raise inside the batch function (no silent bias), and
-    n <= ddof raises before any cluster work.
+    Fail-loud: ragged vectors or null elements raise instead of
+    silently biasing the sums (unequal per-position counts are caught
+    by the means pass, anything else inside the batch function), and
+    n <= ddof raises before any cluster work, since dividing by
+    n - ddof would emit Infinity rows that poison ``pca_components``
+    with NaNs.
     """
     import numpy as np
     import pandas as pd
@@ -534,14 +429,14 @@ def covariance_matrix_partial(
     ).collect()
     if len(mrows) != dim or any(r["cnt"] != mrows[0]["cnt"] for r in mrows):
         raise ValueError(
-            f"covariance_matrix_partial needs uniform {vec_col} length {dim}: "
+            f"covariance_matrix needs uniform {vec_col} length {dim}: "
             f"got {len(mrows)} distinct positions with per-position counts "
             f"{sorted({r['cnt'] for r in mrows})}"
         )
     n = mrows[0]["cnt"]
     if n <= ddof:
         raise ValueError(
-            f"covariance_matrix_partial needs more than ddof={ddof} rows, got {n}"
+            f"covariance_matrix needs more than ddof={ddof} rows, got {n}"
         )
     mu_list = [0.0] * dim
     for r in mrows:
@@ -561,12 +456,12 @@ def covariance_matrix_partial(
             )
             if X.ndim != 2 or X.shape[1] != d:
                 raise ValueError(
-                    f"covariance_matrix_partial needs uniform length-{d} "
+                    f"covariance_matrix needs uniform length-{d} "
                     f"vectors, got batch shape {X.shape}"
                 )
             if np.isnan(X).any():
                 raise ValueError(
-                    "covariance_matrix_partial: null/NaN element in "
+                    "covariance_matrix: null/NaN element in "
                     f"'{vec_col}'"
                 )
             pn += X.shape[0]

@@ -752,46 +752,6 @@ def event_hourly_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "event_type_stats_salted",
-    oracle="""
-    SELECT event_type,
-           count(*) AS n_events,
-           round(CAST(sum(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 2) AS total_value,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-    FROM events GROUP BY event_type
-    """,
-    description="Two-stage SALTED aggregation for hot-key skew: 5 distinct "
-    "event_types is exactly the pathological case where all rows funnel "
-    "into 5 reducers. Stage 1 aggregates on (key, hash(user_id)%64) — full "
-    "cluster parallelism — stage 2 merges 64 tiny partials per key. "
-    "Salting on the COUNT DISTINCT argument keeps distinct exact: each "
-    "user lands in one bucket, so bucket distincts sum to the global. "
-    "Result is identical to the plain aggregate (the oracle).",
-)
-def event_type_stats_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from smartpool_bigdata_spark.ops.relational import salted_agg
-
-    ev = _t(spark, sf_dir, "events")
-    out = salted_agg(
-        ev,
-        keys=["event_type"],
-        partials={
-            "n_events": (F.count(F.lit(1)), F.sum),
-            "total_value": (F.sum(F.col("value").cast("decimal(38,10)")), F.sum),
-            "n_users": (F.countDistinct("user_id"), F.sum),
-        },
-        salt_buckets=64,
-        salt_cols=["user_id"],
-    )
-    return out.select(
-        "event_type",
-        "n_events",
-        F.round(F.col("total_value").cast("double"), 2).alias("total_value"),
-        "n_users",
-    )
-
-
-@query(
     "event_type_stats_autotuned",
     oracle="""
     WITH prof AS (
@@ -835,9 +795,11 @@ def event_type_stats_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_strategy/salt_buckets columns are recomputed independently by the "
     "oracle in integer SQL, so the gate locks BOTH the tuner's decision "
     "arithmetic and the salted plan's exactness end-to-end — closing the "
-    "profile->advice->applied-op loop that scale_conf_advisor (decision "
-    "only) and event_type_stats_salted (fixed 64 buckets) each prove half "
-    "of. The profile collect is a driver scalar, like a watermark.",
+    "profile->advice->applied-op loop whose decision half "
+    "scale_conf_advisor proves alone. Salting on the COUNT DISTINCT "
+    "argument keeps distinct exact: each user lands in one bucket, so "
+    "bucket distincts sum to the global. The profile collect is a "
+    "driver scalar, like a watermark.",
 )
 def event_type_stats_autotuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.relational import salted_agg
@@ -878,61 +840,6 @@ def event_type_stats_autotuned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_users",
         F.lit(adv["agg_strategy"]).alias("agg_strategy"),
         F.lit(buckets).cast("bigint").alias("salt_buckets"),
-    )
-
-
-@query(
-    "event_session_window_native",
-    oracle="""
-    WITH seq AS (
-        SELECT user_id, event_id, ts, value,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_s
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sid AS (
-        SELECT user_id, ts, value,
-               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS s
-        FROM seq
-    )
-    SELECT user_id,
-           min(ts) AS w_start,
-           max(ts) + INTERVAL 30 MINUTE AS w_end,
-           count(*) AS n_events,
-           round(CAST(sum(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 2)
-               AS total_value
-    FROM sid GROUP BY user_id, s
-    """,
-    description="NATIVE session windows (F.session_window, the gap-based "
-    "dynamic window Spark added for sessionization): per-user sessions "
-    "with a 30-minute inactivity gap, each session's span being "
-    "[first_event, last_event + gap) — events exactly gap apart MERGE "
-    "(empirically pinned: a new session starts only when the gap is "
-    "STRICTLY exceeded). Complements the manual lag/cumsum islands of "
-    "user_session_windows/user_sessions with the built-in operator a "
-    "Spark user reaches for first; the oracle recomputes the islands "
-    "with the strict-gap rule. One shuffle on user_id; session merging "
-    "is per-group local work. Batch plan == the streaming twin "
-    "stream_session_window_agg's (unified model).",
-)
-def event_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            stable_sum("value", 2).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("w_start"),
-            F.col("session_window.end").alias("w_end"),
-            "n_events",
-            "total_value",
-        )
     )
 
 
@@ -1823,37 +1730,6 @@ def priority_revenue_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "order_priority_pivot_native",
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS O,
-           CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS F,
-           CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS P
-    FROM orders GROUP BY o_orderpriority
-    """,
-    description="Native groupBy().pivot() with the pivot domain supplied "
-    "explicitly — the API twin of the conditional-aggregate manual pivot "
-    "(order_priority_pivot). Supplying values= matters at scale: without "
-    "it Spark runs an extra distinct-values job over the full table "
-    "before it can even plan. Count aggregate per (priority × status); "
-    "missing cells are 0 via coalesce.",
-)
-def order_priority_pivot_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    out = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["O", "F", "P"])
-        .count()
-    )
-    # absent (priority, status) combos pivot to NULL; the oracle's CASE
-    # sum yields 0 — normalize
-    return out.select(
-        "o_orderpriority",
-        *[F.coalesce(F.col(c), F.lit(0)).cast("bigint").alias(c) for c in ("O", "F", "P")],
-    )
-
-
-@query(
     "user_distinct_hll",
     oracle="""
     SELECT event_type,
@@ -1919,42 +1795,6 @@ def event_props_parsed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "props",
         F.from_json("props", "k BIGINT").getField("k").alias("k"),
-    )
-    return parsed.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.min("k").cast("bigint").alias("min_k"),
-        F.max("k").cast("bigint").alias("max_k"),
-        stable_avg("k", 4).alias("avg_k"),
-    )
-
-
-@query(
-    "event_props_variant",
-    oracle="""
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(min(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-           CAST(max(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k,
-           round(CAST(sum(CAST(CAST(json_extract(props, '$.k') AS BIGINT)
-                               AS DECIMAL(38,10))) AS DOUBLE)
-                 / count(CAST(json_extract(props, '$.k') AS BIGINT)), 4) AS avg_k
-    FROM events GROUP BY event_type
-    """,
-    description="Spark 4 VariantType twin of event_props_parsed: "
-    "parse_json encodes the payload ONCE into the binary variant "
-    "format and every variant_get path extraction reads that encoding — "
-    "the modern engine path for semi-structured columns, vs from_json "
-    "re-parsing text per schema (with an explicit struct you pay one "
-    "parse; with N independent field reads, variant wins and also "
-    "keeps open-schema payloads queryable without declaring a struct). "
-    "Same oracle as the from_json twin: the two parse paths are "
-    "value-locked to each other.",
-)
-def event_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    parsed = ev.select(
-        "event_type",
-        F.expr("variant_get(parse_json(props), '$.k', 'bigint')").alias("k"),
     )
     return parsed.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -4845,7 +4685,7 @@ def _lpa_oracle(iterations: int = 3) -> str:
     "oracle possible — one (vote, argmax) CTE pair per sweep, ALL "
     "integer arithmetic (the only doubles are the final modularity "
     "division). Completes the graph-analytics family: components "
-    "(HashMin/two-phase/incremental), centrality (PageRank), "
+    "(from scratch/incremental), centrality (PageRank), "
     "structure (triangles), and now communities. Scale: each sweep is "
     "one label-vector join + one (node, label) count + a per-node "
     "argmax window whose fan-in is bounded by distinct neighbor "
@@ -9555,7 +9395,7 @@ _OLS_SUMS_SQL = """
     "association differences. This is the never-iterate, never-collect "
     "regression pattern: at 100 TB the fit is one map-side-combined agg "
     "(a dozen numbers per partition) regardless of row count, the same "
-    "partial-moment trick as embedding_covariance_partial's X'X.",
+    "partial-moment trick as embedding_covariance's X'X.",
 )
 def event_value_ols2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
@@ -10368,8 +10208,8 @@ def customer_er_em_params(spark: SparkSession, sf_dir: str) -> DataFrame:
     "score (customer_er_match_scores) -> fit (customer_er_em_params) "
     "-> CLUSTER, the full record-linkage pipeline. Match = Fellegi-"
     "Sunter score > 4.5 (name-suffix agreement required), edges "
-    "symmetrized, components via ops.graph.connected_components_"
-    "two_phase (large-star/small-star, O(log^2 n) rounds — transitive "
+    "symmetrized, components via ops.graph.connected_components "
+    "(large-star/small-star, O(log^2 n) rounds — transitive "
     "closure is exactly where naive pairwise linkage breaks: two pairs "
     "(a,b),(b,c) must land in ONE entity even when (a,c) was never "
     "compared, and at 100 TB the closure must contract geometrically, "
@@ -10379,9 +10219,7 @@ def customer_er_em_params(spark: SparkSession, sf_dir: str) -> DataFrame:
     "+ min-label, the pattern proven on the dup-cluster family.",
 )
 def customer_er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from smartpool_bigdata_spark.ops.graph import (
-        connected_components_two_phase,
-    )
+    from smartpool_bigdata_spark.ops.graph import connected_components
 
     name_eq, bal_close = _er_predicates()
     score = F.when(name_eq, F.lit(6.5)).otherwise(F.lit(-4.3)) + F.when(
@@ -10395,7 +10233,7 @@ def customer_er_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.c_custkey").alias("dst"),
         )
     )
-    comp = connected_components_two_phase(pairs, "src", "dst")
+    comp = connected_components(pairs, "src", "dst")
     bal = _t(spark, sf_dir, "customer").select(
         "c_custkey",
         F.round(F.col("c_acctbal") * 100).cast("bigint").alias("bal_cents"),

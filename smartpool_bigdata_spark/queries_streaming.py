@@ -935,79 +935,6 @@ def stream_cdf_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "stream_session_window_agg",
-    oracle="""
-    WITH wm AS (SELECT max(ts) - INTERVAL 1 HOUR AS cut FROM events),
-    seq AS (
-        SELECT user_id, event_id, ts, value,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS new_s
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    sid AS (
-        SELECT user_id, ts, value,
-               sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS s
-        FROM seq
-    ),
-    sess AS (
-        SELECT user_id,
-               min(ts) AS w_start,
-               max(ts) + INTERVAL 30 MINUTE AS w_end,
-               count(*) AS n_events,
-               round(CAST(sum(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 2)
-                   AS total_value
-        FROM sid GROUP BY user_id, s
-    )
-    SELECT user_id, w_start, w_end, n_events, total_value
-    FROM sess, wm WHERE w_end <= wm.cut
-    """,
-    description="REAL streaming run of NATIVE session windows "
-    "(F.session_window + watermark, append mode): per-user 30-minute-gap "
-    "sessions drain through Trigger.AvailableNow; a session emits exactly "
-    "once, when the watermark passes its end (last_event + gap) — state "
-    "is one open session per active user, bounded by the watermark. "
-    "Emitted set == sessions with end <= max(event_time) - delay "
-    "(empirically pinned, same final-flush semantics as the tumbling "
-    "harness), so the islands-SQL oracle is exact. The operator the "
-    "reference's sensor sessions would need at a real gap workload; "
-    "batch twin: event_session_window_native.",
-    skip_bench=True,  # staging write + stream startup dominates
-)
-def stream_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from smartpool_bigdata_spark.functions import stable_sum
-
-    stream, stage = _stream_events(spark, sf_dir, ["ts", "user_id", "value"])
-    sess = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            stable_sum("value", 2).alias("total_value"),
-        )
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("w_start"),
-            F.col("session_window.end").alias("w_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-    name = f"mem_{uuid.uuid4().hex}"
-    try:
-        run_available_now(sess, name, fmt="memory")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return (
-        spark.table(name)
-        .withColumn("w_start", F.col("w_start").cast("timestamp_ntz"))
-        .withColumn("w_end", F.col("w_end").cast("timestamp_ntz"))
-    )
-
-
-@query(
     "stream_state_accounting",
     oracle="""
     WITH wm AS (SELECT max(ts) - INTERVAL 1 HOUR AS cut FROM events),

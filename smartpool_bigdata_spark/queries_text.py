@@ -882,10 +882,10 @@ def llm_corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact percentile()'s per-group value buffer. With accuracy >= the "
     "group size the GK sketch is lossless and Spark's returned element "
     "matches DuckDB's quantile_disc rank-for-rank (convention pinned by "
-    "tests/test_text_ops.py::test_approx_percentile_matches_quantile_disc"
-    "_convention); above that the sketch guarantees rank error <= 1/"
-    "accuracy and the oracle would need a tolerance — which is exactly "
-    "when the exact twin stops scaling too.",
+    "tests/test_text_ops.py::test_approx_percentile_matches_quantile_disc_convention); "
+    "above that the sketch guarantees rank error <= 1/accuracy and the oracle "
+    "would need a tolerance — which is exactly when the exact twin stops "
+    "scaling too.",
 )
 def doc_token_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _ts(spark, sf_dir, "documents")
@@ -1624,52 +1624,6 @@ def doc_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "doc_signature_table_pairs",
-    oracle=_near_dup_oracle(),
-    description="Materialized-signature-table near-dup: build_signature_table "
-    "computes (sh_set, minhash sig, simhash, fingerprint) in ONE corpus "
-    "pass, write_signature_table stores it doc_id-bucketed+sorted, and the "
-    "LSH banding runs off the RE-READ table — the 100 TB 'compute "
-    "signatures once, band many runs' form of doc_near_dup_pairs (whose "
-    "persist() only lives for one session). Same oracle as "
-    "doc_near_dup_pairs: the table round-trip must be lossless. Column "
-    "pruning drops simhash/fingerprint from this consumer's scan.",
-    skip_bench=True,  # the table write + localCheckpoint happen inside the
-    # build, so the timed noop write would measure a cached scan, not the
-    # pipeline (same reason the ingest queries skip the bench)
-)
-def doc_signature_table_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
-    from smartpool_bigdata_spark.ops.text import (
-        build_signature_table,
-        minhash_pairs_from_signatures,
-        write_signature_table,
-    )
-
-    # _ts (r13): the signature stage (tokenize + shingle + 32-perm
-    # minhash) is the dominant map cost and arrives as 1-2 splits on
-    # local testdata — spread parallelizes it (measured 2.8 -> 1.4 s
-    # cold; the r3 "LSH loses from spread" reading was taken when the
-    # warm signature cache hid this stage). No-op on cluster scans.
-    docs = _ts(spark, sf_dir, "documents")
-    corpus = _near_dup_corpus_spark(docs)
-    stage = tempfile.mkdtemp(prefix="spark_sigtab_")
-    try:
-        sig = build_signature_table(corpus, "doc_id", "text", shingle_k=3)
-        tbl = write_signature_table(
-            sig, "doc_signatures_tbl", os.path.join(stage, "signatures")
-        )
-        pairs = minhash_pairs_from_signatures(tbl, threshold=0.5)
-        return pairs.localCheckpoint(eager=True)  # materialize before cleanup
-    finally:
-        spark.sql("DROP TABLE IF EXISTS doc_signatures_tbl")
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-@query(
     "doc_incremental_near_dup",
     # the full-run oracle restricted to pairs that touch the new batch
     # (mutant ids sit at +1e6) — the incremental path must be LOSSLESS
@@ -1976,9 +1930,9 @@ def doc_groupwise_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_dup_clusters",
     oracle=_dup_clusters_oracle(),
     description="Near-duplicate CLUSTERING: MinHash-LSH pairs -> iterative "
-    "connected components (HashMin min-label propagation; join+agg per "
-    "iteration, lineage cut per step, converges in diameter iterations) -> "
-    "cluster sizes. The step that turns pair detection into an actionable "
+    "connected components (alternating large-star/small-star; join+agg "
+    "per round, lineage cut per round, ~log2(n) rounds) -> cluster "
+    "sizes. The step that turns pair detection into an actionable "
     "keep-one-per-cluster dedup. Oracle: the same LSH pipeline + a "
     "RECURSIVE CTE reachability closure in DuckDB — a full value-hash "
     "check of an iterative distributed algorithm.",
@@ -2000,39 +1954,11 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "doc_dup_clusters_twophase",
-    oracle=_dup_clusters_oracle(),
-    description="doc_dup_clusters through the SCALE-PATH clustering "
-    "algorithm: alternating large-star/small-star connected components "
-    "(Kiveris et al. SoCC'14, ~log2(n) rounds vs HashMin's diameter "
-    "iterations — the swap SCALE.md §6 prescribes for billion-edge dup "
-    "graphs). Same oracle SQL as doc_dup_clusters, so the two algorithms "
-    "are value-hash-locked to each other AND to the DuckDB recursive-CTE "
-    "closure; random-graph equivalence is additionally property-tested "
-    "in tests/test_properties.py.",
-    skip_bench=True,  # the pair stage is benched as doc_near_dup_pairs
-)
-def doc_dup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from smartpool_bigdata_spark.ops.graph import connected_components_two_phase
-
-    # _ts (r13): the signature stage (tokenize + shingle + 32-perm
-    # minhash) is the dominant map cost and arrives as 1-2 splits on
-    # local testdata — spread parallelizes it (measured 2.8 -> 1.4 s
-    # cold; the r3 "LSH loses from spread" reading was taken when the
-    # warm signature cache hid this stage). No-op on cluster scans.
-    docs = _ts(spark, sf_dir, "documents")
-    corpus = _near_dup_corpus_spark(docs)
-    pairs = minhash_near_dup_pairs(corpus, "doc_id", "text", shingle_k=3, threshold=0.5)
-    cc = connected_components_two_phase(pairs, src="doc_a", dst="doc_b")
-    return cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-
-
-@query(
     "doc_incremental_dup_clusters",
     oracle=_dup_clusters_oracle(),
     description="Incremental CLUSTER maintenance closing the dedup "
-    "loop's last gap: yesterday's corpus carries a component map (two-"
-    "phase CC over base-corpus near-dup pairs) and a signature table; "
+    "loop's last gap: yesterday's corpus carries a component map (CC "
+    "over base-corpus near-dup pairs) and a signature table; "
     "the new batch's pairs come from incremental_minhash_pairs and "
     "merge into the map via ops.graph.connected_components_incremental "
     "— existing components CONTRACT to their roots, CC runs only on the "
@@ -2050,8 +1976,8 @@ def doc_incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from smartpool_bigdata_spark.ops.graph import (
+        connected_components,
         connected_components_incremental,
-        connected_components_two_phase,
     )
     from smartpool_bigdata_spark.ops.text import (
         build_signature_table,
@@ -2077,9 +2003,7 @@ def doc_incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(stage, "base_signatures"),
         )
         base_pairs = minhash_pairs_from_signatures(tbl, threshold=0.5)
-        asg = connected_components_two_phase(
-            base_pairs, src="doc_a", dst="doc_b"
-        )
+        asg = connected_components(base_pairs, src="doc_a", dst="doc_b")
         new_sig = build_signature_table(new, "doc_id", "text", shingle_k=3)
         new_pairs = incremental_minhash_pairs(new_sig, tbl, threshold=0.5)
         cc = connected_components_incremental(
@@ -2099,7 +2023,7 @@ def doc_incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_dup_clusters_oracle(),
     description="The FULL incremental dedup loop as a stream — pairs AND "
     "clusters: the base corpus seeds a signature table and a component "
-    "map (two-phase CC over its own pairs); the new documents then "
+    "map (CC over its own pairs); the new documents then "
     "arrive in rate-limited micro-batches through foreachBatch + "
     "incremental_dedup_batch with assignment_path set, so each batch "
     "signs once, pairs against the current corpus, and folds its edges "
@@ -2116,7 +2040,7 @@ def stream_incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFra
     import shutil
     import tempfile
 
-    from smartpool_bigdata_spark.ops.graph import connected_components_two_phase
+    from smartpool_bigdata_spark.ops.graph import connected_components
     from smartpool_bigdata_spark.ops.text import (
         build_signature_table,
         minhash_pairs_from_signatures,
@@ -2146,7 +2070,7 @@ def stream_incremental_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFra
         base_pairs = minhash_pairs_from_signatures(
             spark.read.parquet(sig_path), threshold=0.5
         )
-        connected_components_two_phase(
+        connected_components(
             base_pairs, src="doc_a", dst="doc_b"
         ).write.parquet(asg_path)
         new.repartition(4).write.parquet(src)

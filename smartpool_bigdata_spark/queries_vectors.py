@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smartpool_bigdata_spark.catalog import load_table
 from smartpool_bigdata_spark.ops.relational import top_n_per_group
 from smartpool_bigdata_spark.ops.vectors import (
     as_double_array,
@@ -450,7 +451,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     description="Embedding near-duplicate CLUSTERING: banded "
     "random-hyperplane sign-LSH pairs (cosine >= 0.99) -> iterative "
-    "connected components (HashMin label propagation) -> cluster sizes. "
+    "connected components (large-star/small-star) -> cluster sizes. "
     "The same pairs-to-keep-list step as doc_dup_clusters, over the vector "
     "modality. Oracle: DuckDB RECURSIVE CTE reachability closure — a full "
     "value-hash check of an iterative distributed algorithm on embeddings.",
@@ -1387,47 +1388,23 @@ _COV_ORACLE = f"""
     "for PCA/whitening-based embedding-space analysis (ops/vectors.py: "
     "pca_components eigendecomposes this driver-side and pca_project "
     "broadcasts the components back as plan literals; invariants "
-    "pytest-locked in tests/test_vector_ops.py). Single-pass shapes: "
-    "means = one agg riding back as a broadcast array; centered products "
-    "generated in-row by a nested sequence transform (no self-join), one "
-    "shuffle on (i, j); decimal-stable sums so the value hash holds "
-    "under any partitioning. At d in the thousands the d^2/2 fan-out "
-    "dominates and the swap is a mapInPandas partial X^T X per Arrow "
-    "batch (docstring).",
+    "pytest-locked in tests/test_vector_ops.py). Shape: means = one "
+    "decimal-stable agg collected as d driver scalars; centered partial "
+    "X^T X per Arrow batch via mapInPandas (one d x d float64 matmul per "
+    "batch, d(d+1)/2 rows per PARTITION, not per row), then one tiny "
+    "decimal-stable (i, j) reduce — centering by the true means keeps "
+    "the float sums cancellation-free, so the 6-decimal round matches "
+    "the oracle's exact decimal sums.",
     skip_bench=False,
 )
 def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.vectors import covariance_matrix
 
-    emb = _t(spark, sf_dir, "embeddings")
+    # plain scan, not the spread re-split: the per-row work is one BLAS
+    # matmul per Arrow batch, and every extra partition adds d(d+1)/2
+    # partial rows to the shuffle
+    emb = load_table(spark, sf_dir, "embeddings")
     cov = covariance_matrix(emb, "embedding", dim=_COV_DIM)
-    return cov.select(
-        F.col("i").cast("bigint").alias("i"),
-        F.col("j").cast("bigint").alias("j"),
-        F.round("cov", 6).alias("cov"),
-    )
-
-
-@query(
-    "embedding_covariance_partial",
-    oracle=_COV_ORACLE,
-    description="Disclosed TWIN of embedding_covariance through the "
-    "large-d scale path (ops/vectors.py:covariance_matrix_partial): "
-    "centered partial X^T X per Arrow batch via mapInPandas (one d x d "
-    "float64 matmul per batch, d(d+1)/2 rows per PARTITION), then one "
-    "tiny decimal-stable (i, j) reduce — at d in the thousands this "
-    "replaces the exact form's per-ROW d^2/2 fan-out with a per-"
-    "partition one, the difference between a 100 TB shuffle and a few "
-    "GB. Same oracle as the exact twin: centering by the true means "
-    "keeps per-batch float sums cancellation-free, so both forms agree "
-    "to ~1e-12 (property-locked in tests/test_vector_ops.py) and round "
-    "identically at 6 decimals.",
-)
-def embedding_covariance_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from smartpool_bigdata_spark.ops.vectors import covariance_matrix_partial
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cov = covariance_matrix_partial(emb, "embedding", dim=_COV_DIM)
     return cov.select(
         F.col("i").cast("bigint").alias("i"),
         F.col("j").cast("bigint").alias("j"),
@@ -1471,7 +1448,7 @@ _PCA_K = 8
 def embedding_pca_whitened(spark: SparkSession, sf_dir: str) -> DataFrame:
     from smartpool_bigdata_spark.ops.vectors import pca_components, pca_project
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")  # as embedding_covariance
     comps_all, vals_all = pca_components(emb, "embedding", k=_COV_DIM, dim=_COV_DIM)
     comps, vals = comps_all[:_PCA_K], vals_all[:_PCA_K]
     proj = pca_project(emb, comps, "embedding", eigenvalues=vals)

@@ -20,6 +20,30 @@ def _with_trigger(writer, trigger: dict | None):
     return writer.trigger(**trigger) if trigger else writer
 
 
+def _start_foreach_batch(
+    df: DataFrame,
+    handle,
+    checkpoint: str,
+    trigger: dict | None,
+    query_name: str | None,
+) -> StreamingQuery:
+    """Start ``df`` through ``foreachBatch(handle)``: empty micro-batches
+    are skipped before ``handle(batch_df, batch_id)`` runs, and the
+    checkpoint makes the query restartable (every handler here MERGEs by
+    key, so a replayed batch is idempotent)."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if not batch_df.isEmpty():
+            handle(batch_df, batch_id)
+
+    writer = df.writeStream.foreachBatch(run).option(
+        "checkpointLocation", checkpoint
+    )
+    if query_name:
+        writer = writer.queryName(query_name)
+    return _with_trigger(writer, trigger).start()
+
+
 def start_file_sink(
     df: DataFrame,
     path: str,
@@ -100,8 +124,6 @@ def start_foreach_batch_upsert(
     from smartpool_bigdata_spark.ops.relational import latest_by_key
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch = (
             latest_by_key(batch_df, keys, dedupe_order)
             if dedupe_order is not None
@@ -109,12 +131,7 @@ def start_foreach_batch_upsert(
         )
         merge_upsert(batch_df.sparkSession, target_path, batch, keys)
 
-    writer = df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    return _with_trigger(writer, trigger).start()
+    return _start_foreach_batch(df, handle, checkpoint, trigger, query_name)
 
 
 def start_incremental_dedup(
@@ -146,8 +163,6 @@ def start_incremental_dedup(
     from smartpool_bigdata_spark.ops.text import incremental_dedup_batch
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         incremental_dedup_batch(
             batch_df,
             sig_table_path,
@@ -159,12 +174,7 @@ def start_incremental_dedup(
             assignment_path=assignment_path,
         )
 
-    writer = docs_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    return _with_trigger(writer, trigger).start()
+    return _start_foreach_batch(docs_stream, handle, checkpoint, trigger, query_name)
 
 
 def start_ivf_assignment(
@@ -194,8 +204,6 @@ def start_ivf_assignment(
     from smartpool_bigdata_spark.ops.vectors import assign_ivf_buckets
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         assigned = assign_ivf_buckets(
             batch_df, centroids, id_col=id_col, vec_col=vec_col
         ).select(id_col, "bucket")
@@ -203,12 +211,7 @@ def start_ivf_assignment(
             batch_df.sparkSession, assignment_path, assigned, [id_col]
         )
 
-    writer = emb_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    return _with_trigger(writer, trigger).start()
+    return _start_foreach_batch(emb_stream, handle, checkpoint, trigger, query_name)
 
 
 def start_cms_cells(
@@ -244,8 +247,6 @@ def start_cms_cells(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         cells = (
             batch_df.select(
                 F.explode(F.expr(f"sequence(0, {d - 1})")).alias("r"),
@@ -261,12 +262,7 @@ def start_cms_cells(
             ["__batch_id", "r", "b"],
         )
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    return _with_trigger(writer, trigger).start()
+    return _start_foreach_batch(stream, handle, checkpoint, trigger, query_name)
 
 
 def read_cms_cells(spark: SparkSession, delta_log_path: str) -> DataFrame:
@@ -309,8 +305,6 @@ def start_cdf_view_maintenance(
     from smartpool_bigdata_spark.io.sinks import merge_upsert
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         val = F.col(value_col).cast("decimal(38,10)")
         sgn = F.when(F.col("_change_type") == "update_preimage", -1).otherwise(1)
         delta = batch_df.groupBy(*group_cols).agg(
@@ -324,12 +318,7 @@ def start_cdf_view_maintenance(
             ["__batch_id", *group_cols],
         )
 
-    writer = feed_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    return _with_trigger(writer, trigger).start()
+    return _start_foreach_batch(feed_stream, handle, checkpoint, trigger, query_name)
 
 
 def read_cdf_view(
@@ -377,8 +366,6 @@ def start_pq_encode(
     from smartpool_bigdata_spark.ops.vectors import pq_encode
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         codes = pq_encode(
             batch_df, codebook, id_col=id_col, vec_col=vec_col,
             subspaces=subspaces, subdim=subdim,
@@ -387,12 +374,7 @@ def start_pq_encode(
             batch_df.sparkSession, codes_path, codes, [id_col, "sub"]
         )
 
-    writer = emb_stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    return _with_trigger(writer, trigger).start()
+    return _start_foreach_batch(emb_stream, handle, checkpoint, trigger, query_name)
 
 
 def run_available_now(
@@ -469,10 +451,6 @@ def progress_summary(query: StreamingQuery) -> dict:
     }
 
 
-def active_queries(spark: SparkSession) -> list[StreamingQuery]:
-    return list(spark.streams.active)
-
-
 def start_foreach_batch_quarantine(
     df: DataFrame,
     clean_path: str,
@@ -497,16 +475,9 @@ def start_foreach_batch_quarantine(
     from smartpool_bigdata_spark.io.sinks import merge_upsert
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         valid, invalid = quarantine_split(batch_df, rules)
         merge_upsert(spark, clean_path, valid, keys)
         merge_upsert(spark, quarantine_path, invalid, keys)
 
-    writer = df.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    return _with_trigger(writer, trigger).start()
+    return _start_foreach_batch(df, handle, checkpoint, trigger, query_name)

@@ -1,8 +1,10 @@
-"""Custom stateful streaming operator: gap-based sessionization with
-``applyInPandasWithState`` — the extension point for semantics Spark's
-built-in streaming aggregates can't express (one OPEN session per key,
-closed either by an observed gap or by event-time timeout when the
-watermark passes end+gap).
+"""The engine's custom stateful streaming operator: gap-based
+sessionization with ``applyInPandasWithState`` (GroupState) — the
+extension point for semantics Spark's built-in streaming aggregates
+can't express (one OPEN session per key, closed either by an observed
+gap or by event-time timeout when the watermark passes end+gap). It runs
+on the default HDFS-backed state store, so it needs no RocksDB provider
+and no protobuf client; ``transformWithState`` would need both.
 
 The batch twin is ``ops.relational.sessionize`` (lag + running sum); on a
 replayed/closed input the streaming emission converges to the batch
@@ -16,7 +18,6 @@ shuffled once on the key.
 
 from __future__ import annotations
 
-import contextlib as _contextlib
 import datetime as dt
 from collections.abc import Iterator
 
@@ -105,138 +106,3 @@ def sessionize_stream(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     return out
-
-
-@_contextlib.contextmanager
-def rocksdb_state_store(spark):
-    """``transformWithState`` only runs on the RocksDB state store
-    provider; set it for the duration of a query START (the provider is
-    pinned into the query's checkpoint at start, so restoring the
-    previous conf afterwards does not affect the running query). The
-    HDFS-backed default stays in place for everything else."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    want = (
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, want)
-    try:
-        yield
-    finally:
-        if prev is None or prev == want:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def sessionize_stream_tws(
-    stream_df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    gap_seconds: float,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """``sessionize_stream`` through Spark 4's NATIVE arbitrary-state API
-    (``transformWithStateInPandas`` + StatefulProcessor): same contract —
-    emit closed sessions on observed gap, event-time TIMERS close the
-    last open session once the watermark passes end+gap.
-
-    Differences from the GroupState form, which are exactly why the new
-    API exists: typed named state handles (``getValueState``) instead of
-    one opaque tuple, first-class multi-timer registration
-    (``registerTimer``/``listTimers``/``deleteTimer``) instead of a
-    single implicit timeout, and an initial-state/TTL surface this
-    operator doesn't need. Requires the RocksDB state store provider
-    (wrap the query start in ``rocksdb_state_store``).
-
-    ENVIRONMENT-BLOCKED in this sandbox, like real Delta: the Python
-    state client behind transformWithState speaks protobuf to the JVM
-    (``pyspark.sql.streaming.proto``), and ``google.protobuf`` is not
-    installed here (no pip). The operator is implemented to the full
-    API contract and its parity test against ``sessionize_stream`` is
-    skipif-armed on protobuf presence
-    (tests/test_streaming.py::test_sessionize_tws_matches_groupstate) —
-    on a normal cluster image (protobuf ships with every Spark distro's
-    Python env) the test runs and the two emit identical rows.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap = dt.timedelta(seconds=gap_seconds)
-    gap_ms = int(gap_seconds * 1000)
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.session = handle.getValueState("session", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            ts_values = []
-            for pdf in rows:
-                ts_values.extend(pdf[ts_col].tolist())
-            ts_values.sort()
-            if not ts_values:
-                return
-            open_session = self.session.get() if self.session.exists() else None
-            closed: list[tuple] = []
-            for ts in ts_values:
-                if open_session is None:
-                    open_session = (ts, ts, 1)
-                else:
-                    start, end, n = open_session
-                    if ts > end + gap:
-                        closed.append(open_session)
-                        open_session = (ts, ts, 1)
-                    else:
-                        open_session = (start, max(end, ts), n + 1)
-            self.session.update(open_session)
-            # one live timer per key: replace whatever was registered for
-            # the previous batch's (shorter) session end
-            for t in list(self.handle.listTimers()):
-                self.handle.deleteTimer(t)
-            timeout_ms = int(open_session[1].timestamp() * 1000) + gap_ms
-            wm_ms = timerValues.getCurrentWatermarkInMs()
-            self.handle.registerTimer(max(timeout_ms, wm_ms + 1))
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        "key": [key[0]] * len(closed),
-                        "session_start": [c[0] for c in closed],
-                        "session_end": [c[1] for c in closed],
-                        "n_events": [c[2] for c in closed],
-                    }
-                )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as pd
-
-            if not self.session.exists():
-                return
-            start, end, n = self.session.get()
-            self.session.clear()
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]],
-                    "session_start": [start],
-                    "session_end": [end],
-                    "n_events": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    watermarked = stream_df.withWatermark(ts_col, watermark)
-    return watermarked.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=SESSION_SCHEMA,
-        outputMode="append",
-        timeMode="eventTime",
-    )

@@ -486,7 +486,7 @@ def test_r8_additions_plan_posture(plans):
         # join-free
         "event_type_stats_autotuned",
         # native session windows: one user shuffle, no join
-        "event_session_window_native",
+        "user_session_windows",
         # Q13: the customer<->orders join may broadcast at test SF or
         # shuffle-hash at scale — either way never SMJ/cartesian
         "customer_order_count_distribution",
@@ -601,7 +601,6 @@ def test_r5_additions_plan_posture(plans):
 
     names = (
         "corpus_token_budget_selection",
-        "embedding_covariance_partial",
         "embedding_pca_whitened",
         "doc_pii_scrub",
         "chunk_dedup_stats",
@@ -627,8 +626,8 @@ def test_r5_additions_plan_posture(plans):
     assert re.search(
         r"hashpartitioning\(__bucket#\d+, lang#\d+", budget
     ), "distributed prefix sum lost its (bucket, lang) exchange"
-    # the covariance scale path runs through Arrow mapInPandas
-    assert "MapInPandas" in plans("embedding_covariance_partial")
+    # covariance runs through Arrow mapInPandas (partial X^T X per batch)
+    assert "MapInPandas" in plans("embedding_covariance")
     # E-S weighted sampling is a single TakeOrdered pass, not a global sort
     ws = plans("doc_weighted_sample")
     assert "TakeOrderedAndProject" in ws

@@ -193,20 +193,16 @@ def test_binned_range_join_covers_window(spark, rows):
         max_size=40,
     )
 )
-def test_two_phase_cc_equals_hashmin_and_model(spark, edge_list):
-    """connected_components_two_phase (large/small-star) must produce the
-    SAME (node -> min-of-component) map as HashMin and as a pure-Python
-    union-find, on random graphs including self-loops, parallel edges and
-    multiple components."""
-    from smartpool_bigdata_spark.ops.graph import (
-        connected_components,
-        connected_components_two_phase,
-    )
+def test_cc_equals_union_find_model(spark, edge_list):
+    """connected_components (large/small-star) must produce the SAME
+    (node -> min-of-component) map as a pure-Python union-find, on
+    random graphs including self-loops, parallel edges and multiple
+    components."""
+    from smartpool_bigdata_spark.ops.graph import connected_components
 
     df = spark.createDataFrame(edge_list, ["src", "dst"])
-    two = {
-        r["node"]: r["component"]
-        for r in connected_components_two_phase(df).collect()
+    got = {
+        r["node"]: r["component"] for r in connected_components(df).collect()
     }
 
     # pure-Python union-find model
@@ -227,12 +223,7 @@ def test_two_phase_cc_equals_hashmin_and_model(spark, edge_list):
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
     want = {n: find(n) for n in nodes}
-    assert two == want
-
-    hashmin = {
-        r["node"]: r["component"] for r in connected_components(df).collect()
-    }
-    assert two == hashmin
+    assert got == want
 
 
 _WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
@@ -404,22 +395,20 @@ def test_incremental_cc_equals_from_scratch(spark, base_edges, new_edges):
     merge existing components, bridge to unseen nodes, or touch nothing
     that exists yet."""
     from smartpool_bigdata_spark.ops.graph import (
+        connected_components,
         connected_components_incremental,
-        connected_components_two_phase,
     )
 
     base_df = spark.createDataFrame(base_edges, ["src", "dst"])
     new_df = spark.createDataFrame(new_edges, ["src", "dst"])
-    asg = connected_components_two_phase(base_df)
+    asg = connected_components(base_df)
     got = {
         r["node"]: r["component"]
         for r in connected_components_incremental(asg, new_df).collect()
     }
     want = {
         r["node"]: r["component"]
-        for r in connected_components_two_phase(
-            base_df.union(new_df)
-        ).collect()
+        for r in connected_components(base_df.union(new_df)).collect()
     }
     assert got == want
     # the MERGE-delta form: base assignment overlaid with the changes

@@ -695,10 +695,10 @@ def test_incremental_dedup_stream_restart_and_replay(spark, tmp_path):
     # component map from the current pairs, then re-apply the batch with
     # assignment_path set — merging edges whose components are already
     # merged must be a no-op on the map
-    from smartpool_bigdata_spark.ops.graph import connected_components_two_phase
+    from smartpool_bigdata_spark.ops.graph import connected_components
 
     asg_path = str(tmp_path / "components")
-    connected_components_two_phase(
+    connected_components(
         spark.read.parquet(pairs_path), src="doc_a", dst="doc_b"
     ).write.parquet(asg_path)
     asg_before = {
@@ -710,80 +710,6 @@ def test_incremental_dedup_stream_restart_and_replay(spark, tmp_path):
         (r["node"], r["component"])
         for r in spark.read.parquet(asg_path).collect()
     } == asg_before
-
-
-@pytest.mark.skipif(
-    __import__("importlib.util", fromlist=["util"]).find_spec("google") is None
-    or __import__("importlib.util", fromlist=["util"]).find_spec("google.protobuf")
-    is None,
-    reason="transformWithState's Python state client needs google.protobuf, "
-    "which is not installed in this sandbox (no pip); runs on any normal "
-    "Spark cluster image",
-)
-def test_sessionize_tws_matches_groupstate(spark, tmp_path):
-    """Spark 4's native arbitrary-state API (transformWithStateInPandas +
-    ValueState + event-time timers) must emit exactly the rows the
-    GroupState sessionizer emits on the same 2-file chronological
-    stream."""
-    import contextlib
-    import glob
-    import uuid
-
-    from smartpool_bigdata_spark.catalog import load_table
-    from smartpool_bigdata_spark.streaming import (
-        event_time_ltz,
-        run_available_now,
-    )
-    from smartpool_bigdata_spark.streaming.stateful import (
-        rocksdb_state_store,
-        sessionize_stream,
-        sessionize_stream_tws,
-    )
-
-    ev = event_time_ltz(
-        load_table(spark, SF_DIR, "events").select("user_id", "ts"), "ts"
-    )
-
-    def run(fn, ctx, tag):
-        src = str(tmp_path / f"src_{tag}")
-        os.makedirs(src)
-        for i, cond in enumerate(["dayofmonth(ts) <= 15", "dayofmonth(ts) > 15"]):
-            sdir = os.path.join(src, f"_s{i}")
-            ev.filter(cond).coalesce(1).write.parquet(sdir)
-            part = glob.glob(os.path.join(sdir, "*.parquet"))[0]
-            dst = os.path.join(src, f"{i:02d}.parquet")
-            shutil.move(part, dst)
-            shutil.rmtree(sdir)
-            os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
-        stream = file_stream(
-            spark, src + "/*.parquet", ev.schema, max_files_per_trigger=1
-        )
-        sess = fn(stream, "user_id", "ts", gap_seconds=1800, watermark="1 hour")
-        name = f"mem_{uuid.uuid4().hex}"
-        with ctx:
-            run_available_now(sess, name, fmt="memory")
-        return {tuple(r) for r in spark.table(name).collect()}
-
-    a = run(sessionize_stream, contextlib.nullcontext(), "gs")
-    b = run(sessionize_stream_tws, rocksdb_state_store(spark), "tws")
-    assert a and a == b
-
-
-def test_rocksdb_state_store_context_restores_conf(spark):
-    from smartpool_bigdata_spark.streaming.stateful import rocksdb_state_store
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        before = spark.conf.get(key)
-    except Exception:
-        before = None
-    with rocksdb_state_store(spark):
-        assert "RocksDBStateStoreProvider" in spark.conf.get(key)
-    try:
-        after = spark.conf.get(key)
-    except Exception:
-        after = None
-    assert after == before
 
 
 def test_pq_encode_stream_restart_and_replay(spark, tmp_path):

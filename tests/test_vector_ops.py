@@ -389,32 +389,25 @@ def test_pca_project_whitens_real_embeddings(spark):
 
 def test_covariance_rejects_degenerate_row_count(spark):
     """n <= ddof would divide by zero and emit Infinity rows that poison
-    pca_components with NaNs — must raise instead (both forms)."""
+    pca_components with NaNs — must raise instead."""
     import pytest as _pytest
 
-    from smartpool_bigdata_spark.ops.vectors import (
-        covariance_matrix,
-        covariance_matrix_partial,
-    )
+    from smartpool_bigdata_spark.ops.vectors import covariance_matrix
 
     one = spark.createDataFrame(
         [(0, [1.0, 2.0])], "vec_id int, embedding array<double>"
     )
-    for fn in (covariance_matrix, covariance_matrix_partial):
-        with _pytest.raises(ValueError, match="more than ddof"):
-            fn(one, "embedding", dim=2)
+    with _pytest.raises(ValueError, match="more than ddof"):
+        covariance_matrix(one, "embedding", dim=2)
 
 
 def test_covariance_rejects_ragged_and_null_vectors(spark):
     """ADVICE r4: a ragged array or null element used to drop out of the
     sums while the denominator stayed global n - ddof, silently biasing
-    the output. Both forms must fail loudly instead."""
+    the output. It must fail loudly instead."""
     import pytest as _pytest
 
-    from smartpool_bigdata_spark.ops.vectors import (
-        covariance_matrix,
-        covariance_matrix_partial,
-    )
+    from smartpool_bigdata_spark.ops.vectors import covariance_matrix
 
     ragged = spark.createDataFrame(
         [(0, [1.0, 2.0]), (1, [1.0, 2.0, 3.0]), (2, [0.0, 1.0])],
@@ -424,40 +417,40 @@ def test_covariance_rejects_ragged_and_null_vectors(spark):
         [(0, [1.0, None]), (1, [1.0, 2.0]), (2, [3.0, 4.0])],
         "vec_id int, embedding array<double>",
     )
-    for fn in (covariance_matrix, covariance_matrix_partial):
-        with _pytest.raises(ValueError, match="uniform"):
-            fn(ragged, "embedding", dim=2)
-        with _pytest.raises(ValueError, match="uniform|null"):
-            fn(withnull, "embedding", dim=2)
+    with _pytest.raises(ValueError, match="uniform"):
+        covariance_matrix(ragged, "embedding", dim=2)
+    with _pytest.raises(ValueError, match="uniform|null"):
+        covariance_matrix(withnull, "embedding", dim=2)
 
 
-def test_covariance_partial_matches_exact(spark):
-    """The large-d scale path (covariance_matrix_partial: mapInPandas
-    centered partial X^T X per Arrow batch) agrees with the exact
-    decimal form at d=64 on real embeddings — and stays put under a
-    different partitioning, since the only float-association freedom is
-    within-batch and centered sums are cancellation-free."""
-    from smartpool_bigdata_spark.ops.vectors import (
-        covariance_matrix,
-        covariance_matrix_partial,
-    )
+def test_covariance_matches_numpy_at_d64(spark):
+    """covariance_matrix (mapInPandas centered partial X^T X per Arrow
+    batch) agrees with numpy's np.cov at d=64 on real embeddings — and
+    stays put under a different partitioning, since the only
+    float-association freedom is within-batch and centered sums are
+    cancellation-free."""
+    import numpy as np
+
+    from smartpool_bigdata_spark.ops.vectors import covariance_matrix
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {
-        (r["i"], r["j"]): r["cov"]
-        for r in covariance_matrix(emb, "embedding", dim=64).collect()
-    }
-    part = {
-        (r["i"], r["j"]): r["cov"]
-        for r in covariance_matrix_partial(
-            emb.repartition(7), "embedding", dim=64
-        ).collect()
-    }
-    assert set(exact) == set(part) and len(exact) == 64 * 65 // 2
-    worst = max(
-        abs(exact[k] - part[k]) / max(1.0, abs(exact[k])) for k in exact
+    want = np.cov(
+        np.array([r["embedding"] for r in emb.select("embedding").collect()],
+                 dtype=np.float64),
+        rowvar=False,
+        ddof=1,
     )
-    assert worst < 1e-9, worst
+    for df in (emb, emb.repartition(7)):
+        got = {
+            (r["i"], r["j"]): r["cov"]
+            for r in covariance_matrix(df, "embedding", dim=64).collect()
+        }
+        assert len(got) == 64 * 65 // 2
+        worst = max(
+            abs(c - want[i - 1, j - 1]) / max(1.0, abs(want[i - 1, j - 1]))
+            for (i, j), c in got.items()
+        )
+        assert worst < 1e-9, worst
 
 
 def test_semdedup_hot_cluster_guard(spark):
