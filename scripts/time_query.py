@@ -1,6 +1,7 @@
 """Per-query timing harness for the optimization loop (guide §1.4).
 
-Times each named registry query with the noop sink, N materializations
+Times each named registry query, build plus noop-sink write (eager build
+work such as checkpoints and staged writes counts), N materializations
 (fresh build each time, same session), printing every run plus the min —
 min-of-N in one session cancels host drift far better than two separate
 whole-registry runs, so before/after comparisons for a single query should
@@ -61,8 +62,8 @@ def main() -> int:
         q = REGISTRY[name]
         runs = []
         for _ in range(n):
-            df = q.build(spark, sf_dir)
             t0 = time.perf_counter()
+            df = q.build(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
             release_signature_caches()

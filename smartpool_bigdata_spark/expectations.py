@@ -314,20 +314,28 @@ class Suite:
         obs = Observation(name)
         return df.observe(obs, *aggs), obs
 
-    def validate_observation(self, obs, df: DataFrame | None = None) -> None:
+    def validate_observation(
+        self, obs, df: DataFrame | None = None, unique_keys: Sequence[str] = ()
+    ) -> None:
         """Raise on violations recorded by an ``observe`` run.
 
         ``obs.get`` blocks until the observed DataFrame's action has
         completed. Pass ``df`` to ALSO run the non-foldable (own-job)
         checks; omit it to validate only the free observed half.
+        ``unique_keys`` names columns ``df`` already holds one row per
+        value of (a ``latest_by_key`` output): a ``Unique`` over a
+        superset of them cannot fail, so it runs no job.
         """
         row = obs.get if obs is not None else {}
+        implied = set(unique_keys)
         violations: list[Violation] = []
         for i, c in enumerate(self.checks):
             if hasattr(c, "aggs"):
                 if obs is not None:
                     violations.extend(c.violations(row, f"_{i}"))
-            elif df is not None:
+            elif df is not None and not (
+                implied and isinstance(c, Unique) and implied <= set(c.keys)
+            ):
                 violations.extend(c.check(df))
         if violations:
             raise ExpectationError("; ".join(str(v) for v in violations))

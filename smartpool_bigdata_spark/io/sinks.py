@@ -93,7 +93,8 @@ def merge_upsert(
     * ``expectations`` (a ``Suite``): its foldable checks observe the
       merged table during the staged write (no extra pass), its own-job
       checks run on the source's upsert rows (its best row per key under
-      ``order_by``). A violation deletes the stage and raises
+      ``order_by``; a ``Unique`` that ``keys`` already imply there runs
+      no job). A violation deletes the stage and raises
       ``ExpectationError``; the target is untouched.
     * ``schema`` is the target's schema when the caller knows it (a table
       it wrote), so reading the target runs no schema-inference job.
@@ -128,7 +129,9 @@ def merge_upsert(
     writer.parquet(stage)
     if expectations is not None:
         try:
-            expectations.validate_observation(obs, upsert)
+            expectations.validate_observation(
+                obs, upsert, unique_keys=keys if order_by else ()
+            )
         except BaseException:
             shutil.rmtree(stage, ignore_errors=True)
             raise

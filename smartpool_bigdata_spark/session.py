@@ -13,6 +13,12 @@ Replaces the reference's ``create_spark`` config module
 * Parquet nanosecond timestamps read as longs (legacy conf) so sources
   written with ns precision are loadable; the catalog converts them to
   microsecond timestamps losslessly for µs-precision data.
+* Local masters run Python workers under the engine's daemon
+  (``pyworker_daemon.py``), which keeps a worker's zip-import caches while
+  the archives are unchanged instead of re-reading ``pyspark.zip`` at the
+  start of every task (SCALE.md §1). Set only when the workers can import
+  the package (``_workers_import_engine``); a caller's
+  ``spark.python.daemon.module`` wins.
 """
 
 from __future__ import annotations
@@ -70,6 +76,20 @@ def _default_local_driver_mem(cap_mb: int = 8192, floor_mb: int = 1024) -> str:
     return f"{max(floor_mb, min(cap_mb, half_mb))}m"
 
 
+def _workers_import_engine() -> bool:
+    """Whether Python workers started by this process's JVM can import the
+    package: ``python -m`` puts the JVM's working directory on a worker's
+    path, and Spark passes ``PYTHONPATH`` on. The JVM inherits both from
+    this process when it launches. A worker that cannot import the daemon
+    module fails every Python task, so anything else keeps Spark's own
+    daemon."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    if not os.environ.get("PYTHONSAFEPATH"):
+        paths.append(os.getcwd())
+    return any(p and os.path.realpath(p) == root for p in paths)
+
+
 def session_builder(
     app_name: str = "smartpool-bigdata-spark",
     master: str | None = None,
@@ -92,6 +112,12 @@ def session_builder(
         confs["spark.driver.memory"] = os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", _default_local_driver_mem()
         )
+    if (
+        master.startswith("local")
+        and "spark.python.daemon.module" not in confs
+        and _workers_import_engine()
+    ):
+        confs["spark.python.daemon.module"] = "smartpool_bigdata_spark.pyworker_daemon"
     for k, v in confs.items():
         builder = builder.config(k, v)
     return builder

@@ -1,5 +1,7 @@
 """Unit tests for the session factory (no JVM needed — builder confs only)."""
 
+import os
+
 from smartpool_bigdata_spark.session import _default_local_driver_mem, session_builder
 
 
@@ -50,6 +52,43 @@ def test_explicit_driver_memory_wins():
         session_builder(master="local[4]", extra_confs={"spark.driver.memory": "2g"})
     )
     assert confs["spark.driver.memory"] == "2g"
+
+
+DAEMON = "spark.python.daemon.module"
+
+
+def test_local_master_runs_engine_worker_daemon(monkeypatch):
+    import smartpool_bigdata_spark.session as S
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(S.__file__)))
+    monkeypatch.chdir(root)
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.delenv("PYTHONSAFEPATH", raising=False)
+    confs = _conf_map(session_builder(master="local[4]"))
+    assert confs[DAEMON] == "smartpool_bigdata_spark.pyworker_daemon"
+    # A cluster master keeps Spark's daemon; a caller's choice wins.
+    assert DAEMON not in _conf_map(session_builder(master="yarn"))
+    explicit = session_builder(master="local[4]", extra_confs={DAEMON: "pyspark.daemon"})
+    assert _conf_map(explicit)[DAEMON] == "pyspark.daemon"
+
+
+def test_worker_daemon_needs_package_on_worker_path(monkeypatch, tmp_path):
+    """Workers that cannot import the daemon module would fail every
+    Python task, so the daemon is chosen only when the package is on the
+    path the workers get: the JVM's working directory or PYTHONPATH."""
+    import smartpool_bigdata_spark.session as S
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(S.__file__)))
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    monkeypatch.delenv("PYTHONSAFEPATH", raising=False)
+    assert DAEMON not in _conf_map(session_builder(master="local[4]"))
+    monkeypatch.setenv("PYTHONPATH", os.pathsep.join([str(tmp_path), root]))
+    assert DAEMON in _conf_map(session_builder(master="local[4]"))
+    monkeypatch.chdir(root)
+    monkeypatch.delenv("PYTHONPATH")
+    monkeypatch.setenv("PYTHONSAFEPATH", "1")  # python -m then skips the cwd
+    assert DAEMON not in _conf_map(session_builder(master="local[4]"))
 
 
 def test_autotune_scale_conf():

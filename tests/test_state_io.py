@@ -741,3 +741,36 @@ def test_merge_upsert_recovers_interrupted_swap(spark, tmp_path, monkeypatch):
     rows = sorted((r["id"], r["v"]) for r in spark.read.parquet(target).collect())
     assert rows == [(1, "a"), (2, "b2"), (3, "c")]
     assert sorted(os.listdir(tmp_path)) == ["silver"]  # old copy and stage gone
+
+
+def test_merge_upsert_skips_only_key_implied_unique(spark, tmp_path, monkeypatch):
+    """With ``order_by`` the upsert rows are one per key, so a ``Unique``
+    over the merge keys (or a superset) cannot fail and runs no job; a
+    ``Unique`` on any other column still runs and still raises."""
+    import pytest as _pytest
+
+    from smartpool_bigdata_spark.expectations import (
+        ExpectationError,
+        NotNull,
+        Suite,
+        Unique,
+    )
+
+    checked = []
+    real_check = Unique.check
+    monkeypatch.setattr(
+        Unique, "check", lambda self, df: checked.append(list(self.keys)) or real_check(self, df)
+    )
+    target = str(tmp_path / "silver")
+    src = spark.createDataFrame([(1, "a", 1), (1, "a", 2), (2, "a", 1)], ["id", "v", "ts"])
+    implied = Suite([NotNull(["id"]), Unique(["id"]), Unique(["v", "id"])])
+    merge_upsert(spark, target, src, keys=["id"], order_by=[F.col("ts").desc()],
+                 expectations=implied)
+    assert checked == []
+    assert sorted(r["ts"] for r in spark.read.parquet(target).collect()) == [1, 2]
+
+    on_value = Suite([NotNull(["id"]), Unique(["id"]), Unique(["v"])])
+    with _pytest.raises(ExpectationError, match="unique"):
+        merge_upsert(spark, target, src, keys=["id"], order_by=[F.col("ts").desc()],
+                     expectations=on_value)
+    assert checked == [["v"]]
